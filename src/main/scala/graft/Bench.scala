@@ -354,9 +354,9 @@ object Bench {
       case e: Exception =>
         System.err.println(s"[bench] could not write bench records: ${e.getMessage}")
     }
-    spark.stop()
-    // contract line LAST (after spark.stop(), whose shutdown can log)
-    println(compact)
+    // contract line LAST (after spark.stop(), whose shutdown can log),
+    // and printed even when stop() throws
+    try spark.stop() finally println(compact)
   }
 
   /** Current git HEAD commit sha, read from the repository files (a

@@ -348,8 +348,10 @@ object Dedup {
   private val SeverIndexBytesDefault = 4L * 1024 * 1024
 
   private def severIndexBytes(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(SeverIndexBytesKey)
-      .map(_.trim.toLong).getOrElse(SeverIndexBytesDefault)
+    df.sparkSession.conf.getOption(SeverIndexBytesKey).map { raw =>
+      raw.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$SeverIndexBytesKey must be a whole number of bytes, got '$raw'"))
+    }.getOrElse(SeverIndexBytesDefault)
 
   /** Size-adaptive hard sever: above the [[SeverIndexBytesKey]]
     * crossover (measured on the shingle-index family) materialize

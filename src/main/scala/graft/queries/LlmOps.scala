@@ -3739,16 +3739,16 @@ object LlmOps {
     * learns from a deterministic hash-sample of DOCUMENTS (md5-derived
     * [[graft.sketch.Sketch.hash60]] of doc_id mod `sampleMod` == 0 —
     * the same engine-portable convention every sampling gate uses): at
-    * 100× corpus scale the k sequential pair-count passes are the one
-    * place this suite's cost grows linearly in rounds × corpus, and BPE
-    * merge selection depends on frequency RANKS, which a uniform
-    * document sample approximately preserves. BpeSampleSpec measures
-    * the sf0.1 divergence bound: this corpus's near-uniform word draw
-    * ties pair ranks within sampling noise, so the merge LIST reorders
-    * (19/32 pairs re-discovered), yet the corpus token count under the
-    * sampled tokenizer drifts only 0.06% (≤ 2% asserted) — the
-    * downstream budget/packing/mixing decisions are insensitive to the
-    * sampling. The GATES always learn full-corpus (sampleMod = 1) so
+    * 100× corpus scale the vocabulary can outgrow what the learner
+    * collects to the driver ([[graft.text.Bpe.MaxVocab]] distinct
+    * words), and BPE merge selection depends on frequency RANKS, which
+    * a uniform document sample approximately preserves. BpeSampleSpec
+    * measures the sf0.1 divergence bound: this corpus's near-uniform
+    * word draw ties pair ranks within sampling noise, so the merge LIST
+    * reorders (19/32 pairs re-discovered), yet the corpus token count
+    * under the sampled tokenizer drifts only 0.06% (≤ 2% asserted) —
+    * the downstream budget/packing/mixing decisions are insensitive to
+    * the sampling. The GATES always learn full-corpus (sampleMod = 1) so
     * their oracles replay exactly. */
   private def bpeWordFreq(s: SparkSession, dir: String,
       sampleMod: Int = 1): DataFrame = {
@@ -3770,9 +3770,9 @@ object LlmOps {
 
   /** One merge-learning run per (corpus content, k), shared by the
     * three BPE gates (t_bpe_learn / t_bpe_encode / t_pack_bpe):
-    * learning is k sequential vocabulary aggregations, and each gate
-    * re-deriving the identical deterministic merge list would triple
-    * that cost in Verify/Bench. Pure memoization of a deterministic
+    * learning is a vocabulary aggregation plus k driver rounds, and
+    * each gate re-deriving the identical deterministic merge list would
+    * triple that cost in Verify/Bench. Pure memoization of a deterministic
     * derivation — results are identical with or without the cache.
     * The key carries a listing fingerprint (file paths/sizes/mtimes of
     * `documents.parquet`, driver-side metadata only) so a dir whose

@@ -2,6 +2,8 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.BpeTokens
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-pair-encoding tokenizer learning — the subword vocabulary step
   * of a real LLM training pipeline (Sennrich et al. 2016, "Neural
@@ -14,20 +16,23 @@ import org.apache.spark.sql.functions._
   * sequence.
   *
   * Scale shape: learning never touches the corpus after the one
-  * word-frequency aggregation — every round runs over the VOCABULARY
-  * (distinct words × frequency, dimension-sized relative to a 100 TB
-  * corpus; vocabulary grows ~Heaps-law sublinearly). Per round: one
-  * map-side-combined pair count over the vocab, a 1-row argmax collect
-  * (driver-sized by contract, the centroid-collect pattern), and a
-  * map-only merge fold. Encoding documents afterward is the codegen'd
+  * word-frequency aggregation, and every round runs over the
+  * VOCABULARY (distinct words × frequency; it grows ~Heaps-law
+  * sublinearly in the corpus). One collect fetches the vocabulary's
+  * (symbols, freq) table — the symbol split stays in Spark — and all K
+  * rounds then run in a plain loop on the driver. The vocabulary is
+  * driver-sized by contract: more than [[MaxVocab]] distinct words
+  * fails loudly (learn from a document sample instead). Encoding
+  * documents afterward is the codegen'd
   * [[org.apache.spark.sql.graft.BpeTokens]] expression with the merge
   * list as a broadcast reference object — a pure map pass.
   *
   * Determinism (what makes the gates SQL-oracle-able): pair counts are
   * exact integer sums; the argmax tie-break (freq DESC, left ASC, right
-  * ASC) is total; the merge fold is order-deterministic (greedy
-  * leftmost, non-overlapping — "a a a" + merge(a,a) → [aa, a]). DuckDB
-  * replays all K rounds bit-for-bit (t_bpe_learn / t_pack_bpe).
+  * ASC, strings in UTF-8 byte order) is total; the merge fold is
+  * order-deterministic (greedy leftmost, non-overlapping — "a a a" +
+  * merge(a,a) → [aa, a]). DuckDB replays all K rounds bit-for-bit
+  * (t_bpe_learn / t_pack_bpe).
   *
   * Symbols are Unicode code points (a surrogate pair is one symbol),
   * matching DuckDB's per-character string indexing. No end-of-word
@@ -68,75 +73,93 @@ object Bpe {
     * `aggregate` fold: merge when the accumulator's last symbol is `l`
     * and the current is `r`, else append). Kept as the value-equality
     * reference for the codegen'd [[org.apache.spark.sql.graft
-    * .BpeTokens]] expression in specs, and used by [[learnMerges]]
-    * itself (vocabulary-sized input — the fold's O(len²) array copies
-    * are bounded by word length). */
+    * .BpeTokens]] expression in specs; the learners apply merges with
+    * [[org.apache.spark.sql.graft.BpeTokens.applyMerge]]. */
   def applyMerge(syms: Column, l: String, r: String): Column =
     aggregate(syms, array().cast("array<string>"),
       (acc, s) => when(get(acc, size(acc) - 1) === lit(l) && (s === lit(r)),
           concat(slice(acc, lit(1), size(acc) - 1), array(concat(lit(l), s))))
         .otherwise(concat(acc, array(s))))
 
+  /** Most distinct words a learner collects to the driver. Larger
+    * vocabularies fail with an error pointing at document-sampled
+    * learning ([[graft.queries.LlmOps.bpeLearnSampled]]). */
+  val MaxVocab: Int = 1 << 20
+
   /** Learn `k` merges from a (word, freq) table. Returns the ordered
     * merge list (left, right, pairFreq) — shorter than `k` iff the
-    * vocabulary runs out of adjacent pairs first.
-    *
-    * Each round's vocabulary goes through [[graft.util.Lineage.cut]]
-    * (persisted RDD + constant-depth logical plan) BEFORE the argmax
-    * materializes it, and the previous round releases as soon as its
-    * successor lands. Plain `persist` is NOT enough here: carrying the
-    * fold lineage grew per-round ANALYSIS cost ~2× per round (measured:
-    * round 14 took 2.8 s, round 19 took 102 s then OOM'd an 8 GB
-    * driver on a vocabulary of ~10k words) — the classic iterative-
-    * Catalyst failure the CC loops already guard against. */
+    * vocabulary runs out of adjacent pairs first. One collect fetches
+    * the vocabulary; the rounds run on the driver. */
   def learnMerges(wordFreq: DataFrame, k: Int,
       wordCol: String = "word", freqCol: String = "freq",
-      symsOf: Column => Column = charSyms): Seq[(String, String, Long)] = {
+      symsOf: Column => Column = charSyms): Seq[(String, String, Long)] =
+    learnMergesCapped(wordFreq, k, wordCol, freqCol, symsOf, MaxVocab)
+
+  /** [[learnMerges]] with an explicit vocabulary limit. */
+  private[graft] def learnMergesCapped(wordFreq: DataFrame, k: Int,
+      wordCol: String, freqCol: String, symsOf: Column => Column,
+      maxVocab: Int): Seq[(String, String, Long)] = {
     require(k >= 1, s"k must be >= 1: $k")
-    var (vocab, release) = graft.util.Lineage.cut(
-      wordFreq.select(symsOf(col(wordCol)).as("syms"),
-        col(freqCol).cast("long").as("freq")))
-    // round r-1's release is deferred until round r's argmax has
-    // materialized round r's cut RDD (the argmax IS the materializing
-    // job — one Spark job per round, no extra count pass; releasing
-    // r-1 earlier would force r's first evaluation to recompute the
-    // whole chain from the source)
-    var prevRelease: Option[Boolean => Unit] = None
-    val merges = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-    try {
-      var round = 0
-      var dry = false
-      while (round < k && !dry) {
-        val best = vocab
-          .filter(size(col("syms")) >= 2)
-          .select(col("freq"), explode(
-            transform(sequence(lit(1), size(col("syms")) - 1),
-              i => struct(element_at(col("syms"), i).as("l"),
-                element_at(col("syms"), i + lit(1)).as("r")))).as("p"))
-          .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-          .agg(sum(col("freq")).as("pf"))
-          .orderBy(desc("pf"), asc("l"), asc("r"))
-          .limit(1).collect()
-        prevRelease.foreach(_(false))
-        prevRelease = Some(release)
-        if (best.isEmpty) dry = true
-        else {
-          val (l, r, pf) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-          merges += ((l, r, pf))
-          val (next, releaseNext) = graft.util.Lineage.cut(
-            vocab.select(applyMerge(col("syms"), l, r).as("syms"), col("freq")))
-          vocab = next
-          release = releaseNext
-          round += 1
-        }
-      }
-      merges.toSeq
-    } finally {
-      // on the dry-exit path prevRelease holds the SAME hook as
-      // release — invoke each hook at most once (the WordPiece
-      // learner's guard, applied to the identical pattern here)
-      prevRelease.foreach(_(false))
-      if (!prevRelease.exists(_ eq release)) release(false)
-    }
+    val (syms, freqs) = collectVocab(wordFreq, wordCol, freqCol, symsOf, maxVocab)
+    learnOnDriver(syms, freqs, k, None).map { case (l, r, pf, _) => (l, r, pf) }
   }
+
+  /** The vocabulary's (symbols, freq) table in one collect, rows with
+    * a null word or frequency dropped (a sum skips nulls). More than
+    * `maxVocab` rows is an error. */
+  private[text] def collectVocab(wordFreq: DataFrame, wordCol: String,
+      freqCol: String, symsOf: Column => Column,
+      maxVocab: Int): (Array[Array[String]], Array[Long]) = {
+    val rows = wordFreq
+      .select(symsOf(col(wordCol)).as("syms"), col(freqCol).cast("long").as("freq"))
+      .filter(col("syms").isNotNull && col("freq").isNotNull)
+      .limit(maxVocab + 1).collect()
+    if (rows.length > maxVocab)
+      throw new IllegalArgumentException(s"merge learning collects the " +
+        s"vocabulary to the driver and takes at most $maxVocab distinct " +
+        "words; this table has more. Learn from a document sample " +
+        "instead (graft.queries.LlmOps.bpeLearnSampled).")
+    (rows.map(_.getSeq[String](0).toArray), rows.map(_.getLong(1)))
+  }
+
+  /** All merge rounds over a driver-held vocabulary — the loop shared
+    * by BPE and WordPiece, which differ only in the pair score. Each
+    * round counts every adjacent pair (overlapping ones included)
+    * weighted by word frequency, takes the argmax of (score DESC,
+    * left ASC, right ASC) and applies the merge to every word. The
+    * score is the pair frequency, or `likelihood(pf, fl, fr)` over the
+    * current symbol frequencies (recounted each round over every word,
+    * one-symbol words included). Returns (left, right, pf, score). */
+  private[text] def learnOnDriver(vocab: Array[Array[String]], freqs: Array[Long],
+      k: Int, likelihood: Option[(Long, Long, Long) => Long])
+      : Seq[(String, String, Long, Long)] = {
+    val words = vocab.clone()
+    def weighted[K](keysOf: Array[String] => Iterator[K]): collection.Map[K, Long] = {
+      val m = collection.mutable.HashMap.empty[K, Long]
+      for (w <- words.indices; key <- keysOf(words(w)))
+        m(key) = Math.addExact(m.getOrElse(key, 0L), freqs(w))
+      m
+    }
+    val rank = Ordering.Tuple3(Ordering.Long.reverse, Utf8Order, Utf8Order)
+    val merges = collection.mutable.ArrayBuffer[(String, String, Long, Long)]()
+    var dry = false
+    while (merges.size < k && !dry) {
+      val pairs = weighted(s => s.iterator.zip(s.iterator.drop(1)))
+      dry = pairs.isEmpty
+      if (!dry) {
+        val symFreq = if (likelihood.isEmpty) Map.empty[String, Long] else weighted(_.iterator)
+        val best @ (l, r, _, _) = pairs.iterator.map { case ((l, r), pf) =>
+          (l, r, pf, likelihood.fold(pf)(_(pf, symFreq(l), symFreq(r))))
+        }.minBy { case (l, r, _, score) => (score, l, r) }(rank)
+        merges += best
+        words.mapInPlace(BpeTokens.applyMerge(_, l, r))
+      }
+    }
+    merges.toSeq
+  }
+
+  /** Spark's string order: unsigned UTF-8 bytes. Not
+    * `String.compareTo`, whose UTF-16 order puts supplementary
+    * characters below U+E000..U+FFFF. */
+  private val Utf8Order: Ordering[String] = Ordering.by(UTF8String.fromString)
 }

@@ -3,14 +3,14 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 
 /** Logical-plan lineage truncation for ITERATIVE DataFrame algorithms
-  * (connected components, BPE merge learning, k-means chains): a loop
-  * that builds round r's frame on top of round r-1's grows the Catalyst
-  * plan every round, and analysis/cache-lookup cost over the carried
-  * tree compounds — `Dataset.persist` alone does NOT cut the logical
-  * plan, it only short-circuits execution. Measured in the BPE learner:
-  * per-round wall time doubled every round past ~14 and OOM'd an 8 GB
-  * driver at round 19, with the DATA (a ~10k-word vocabulary) unchanged
-  * throughout.
+  * (connected components, k-means chains): a loop that builds round
+  * r's frame on top of round r-1's grows the Catalyst plan every round,
+  * and analysis/cache-lookup cost over the carried tree compounds —
+  * `Dataset.persist` alone does NOT cut the logical plan, it only
+  * short-circuits execution. Measured in a per-round DataFrame BPE
+  * learner: per-round wall time doubled every round past ~14 and OOM'd
+  * an 8 GB driver at round 19, with the DATA (a ~10k-word vocabulary)
+  * unchanged throughout.
   *
   * [[cut]] re-roots the frame as a LogicalRDD over the persisted
   * row RDD: execution stays incremental (reads the cache), the plan

@@ -60,19 +60,27 @@ object BpeTokens {
     var syms = syms0
     var m = 0
     while (m < lefts.length && syms.length >= 2) {
-      val l = lefts(m); val r = rights(m)
-      val out = new Array[String](syms.length)
-      var o = 0
-      var j = 0
-      while (j < syms.length) {
-        if (o > 0 && syms(j) == r && out(o - 1) == l) { out(o - 1) = l + r }
-        else { out(o) = syms(j); o += 1 }
-        j += 1
-      }
-      syms = if (o == syms.length) out else java.util.Arrays.copyOf(out, o)
+      syms = applyMerge(syms, lefts(m), rights(m))
       m += 1
     }
     syms
+  }
+
+  /** One greedy leftmost non-overlapping pass of (l, r) → l+r over
+    * `syms` — the step [[applyMerges]] folds, and the merge the
+    * learners ([[graft.text.Bpe.learnMerges]],
+    * [[graft.text.WordPiece.learnMerges]]) apply each round. Returns
+    * `syms` itself when nothing merged; never mutates it. */
+  def applyMerge(syms: Array[String], l: String, r: String): Array[String] = {
+    val out = new Array[String](syms.length)
+    var o = 0
+    var j = 0
+    while (j < syms.length) {
+      if (o > 0 && syms(j) == r && out(o - 1) == l) { out(o - 1) = l + r }
+      else { out(o) = syms(j); o += 1 }
+      j += 1
+    }
+    if (o == syms.length) syms else java.util.Arrays.copyOf(out, o)
   }
 
   /** Word → code-point symbol array (surrogate pair = one symbol). */

@@ -48,4 +48,14 @@ class SeverAdaptiveSpec extends AnyFunSuite {
     }
     assert(run(0L) == run(Long.MaxValue))
   }
+
+  test("a malformed severIndexBytes fails naming the key and the bad value") {
+    spark.conf.set(Dedup.SeverIndexBytesKey, "4MB")
+    try {
+      val e = intercept[IllegalArgumentException](
+        Dedup.ngramJaccardPairs(docs, n = 3, threshold = 0.5))
+      assert(e.getMessage.contains(Dedup.SeverIndexBytesKey) &&
+        e.getMessage.contains("'4MB'"), e.getMessage)
+    } finally spark.conf.unset(Dedup.SeverIndexBytesKey)
+  }
 }
