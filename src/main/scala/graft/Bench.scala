@@ -145,72 +145,17 @@ object Bench {
     // not the session's mood. Both pass totals are emitted so a reviewer
     // can see the warmup delta without a re-run.
     def runPass(): Seq[(String, Double, Map[String, Long])] = {
-      // each pass pays the BPE merge learning once (see clearBpeMergeCache),
-      // timed as its OWN line item: with the per-pass memo the learning
-      // cost otherwise lands on whichever BPE gate runs first in sort
-      // order (t_bpe_encode), skewing that gate's cross-round numbers.
-      // The suite total stays honest either way; this makes per-gate
-      // timings measure the gate, and the shared derivation visible.
-      graft.queries.LlmOps.clearBpeMergeCache()
-      graft.queries.LlmOps.clearBpeBytesMergeCache()
-      graft.queries.LlmOps.clearBpePretokMergeCache()
-      graft.queries.LlmOps.clearWpMergeCache()
-      graft.queries.LlmOps.clearUnigramCensusCache()
-      graft.queries.LlmOps.clearQclfModelCache()
-      graft.queries.LlmOps.clearQclfNgCache()
-      graft.queries.LlmOps.clearTierCache()
-      val learn = {
-        val (sec, m) = once("bpe_learn_shared", (sp, d) => {
-          graft.queries.LlmOps.prewarmBpeMerges(sp, d); sp.range(1).toDF })
-        ("bpe_learn_shared", sec, m)
+      // each pass pays every shared derivation once, timed as its OWN
+      // line item before the gates (see graft.queries.SharedDerivations):
+      // the per-pass clear keeps the cost in each pass's total, and the
+      // separate item keeps it off whichever consumer gate runs first
+      val all = graft.queries.SharedDerivations.all
+      all.foreach(_.clear())
+      val shared = all.map { d =>
+        val (sec, m) = once(d.name, (sp, dir) => { d(sp, dir); sp.range(1).toDF })
+        (d.name, sec, m)
       }
-      // byte-level BPE merge derivation, shared by its three gates
-      val learnBytes = {
-        val (sec, m) = once("bpe_bytes_learn_shared", (sp, d) => {
-          graft.queries.LlmOps.prewarmBpeBytesMerges(sp, d); sp.range(1).toDF })
-        ("bpe_bytes_learn_shared", sec, m)
-      }
-      // pretok-census byte merges (the GPT-2 composition), shared by the
-      // learn/encode/pack/artifact gates of the fifth tokenizer family
-      val learnPretok = {
-        val (sec, m) = once("bpe_pretok_learn_shared", (sp, d) => {
-          graft.queries.LlmOps.prewarmBpePretokMerges(sp, d); sp.range(1).toDF })
-        ("bpe_pretok_learn_shared", sec, m)
-      }
-      // the WordPiece merge+vocab derivation is likewise shared by its
-      // three gates and likewise timed as its own line item
-      val learnWp = {
-        val (sec, m) = once("wordpiece_learn_shared", (sp, d) => {
-          graft.queries.LlmOps.prewarmWpMerges(sp, d); sp.range(1).toDF })
-        ("wordpiece_learn_shared", sec, m)
-      }
-      // ... and the unigram substring census (the corpus-bound half of
-      // unigram-LM learning), shared by its five gates + the report
-      val learnUni = {
-        val (sec, m) = once("unigram_learn_shared", (sp, d) => {
-          graft.queries.LlmOps.prewarmUnigramCensus(sp, d); sp.range(1).toDF })
-        ("unigram_learn_shared", sec, m)
-      }
-      // the perceptron training pass, shared by its two gates
-      val learnQclf = {
-        val (sec, m) = once("quality_clf_learn_shared", (sp, d) => {
-          graft.queries.LlmOps.prewarmQclfModel(sp, d); sp.range(1).toDF })
-        ("quality_clf_learn_shared", sec, m)
-      }
-      // the hashed-n-gram perceptron training, shared by its two gates
-      val learnQclfNg = {
-        val (sec, m) = once("quality_clf_ng_learn_shared", (sp, d) => {
-          graft.queries.LlmOps.prewarmQclfNgModel(sp, d); sp.range(1).toDF })
-        ("quality_clf_ng_learn_shared", sec, m)
-      }
-      // the PageRank -> domain-tier chain, shared by the scheduler family
-      val learnTier = {
-        val (sec, m) = once("tier_chain_shared", (sp, d) => {
-          graft.queries.LlmOps.prewarmTierChain(sp, d); sp.range(1).toDF })
-        ("tier_chain_shared", sec, m)
-      }
-      learn +: learnBytes +: learnPretok +: learnWp +: learnUni +: learnQclf +:
-        learnQclfNg +: learnTier +: ordered.map { case (name, fn) =>
+      shared ++ ordered.map { case (name, fn) =>
         val (sec, m) = once(name, fn); (name, sec, m)
       }
     }

@@ -307,26 +307,6 @@ object Dedup {
         .distinct_shingles(col(textCol), n)).as("s"))
       .select(col("doc"), xxhash64(col("s")).as("s"))
 
-  /** Near-duplicate pairs by exact word-n-gram Jaccard ≥ threshold.
-    * Output: (doc_a, doc_b, jaccard) with doc_a < doc_b.
-    *
-    * `maxShingleDf`: stop-shingle cap. The inverted-index self-join costs
-    * Σ_shingle df(s)² candidate rows, so one ubiquitous shingle (df ~ N)
-    * degenerates to all-pairs. Shingles with document frequency above the
-    * cap are dropped from the JOIN side only; per-doc set sizes stay
-    * uncapped, so the reported jaccard is a LOWER bound (intersection may
-    * lose capped shingles, union never shrinks) — the `≥ threshold`
-    * filter keeps precision intact and can only lose pairs whose
-    * similarity rests on corpus-ubiquitous (uninformative) shingles.
-    * Candidate rows are then bounded by Σ df² ≤ N_index · maxShingleDf.
-    * The default cap never triggers at gate scale (sf0.01: 500 docs), so
-    * oracle semantics are exact there.
-    *
-    * `persistIndex`: off by default — the shingle expression is a
-    * codegen'd one-pass loop, and recomputing it is MEASURABLY cheaper
-    * than materializing the exploded index to MEMORY_AND_DISK (sf0.1,
-    * local[32]: cold 2.2 s without persist vs 5.1 s with). Pass true
-    * only when a long-lived session genuinely reuses the index ≥3×. */
   /** Corpus-size crossover for severing the shingle index (bytes of
     * the optimizer's input-size estimate). The index feeds BOTH
     * self-join sides, the df-cap window and the per-doc set sizes —
@@ -364,29 +344,35 @@ object Dedup {
       graft.util.Lineage.severTracked(df)
     else df
 
+  /** Near-duplicate pairs by exact word-n-gram Jaccard ≥ threshold.
+    * Output: (doc_a, doc_b, jaccard) with doc_a < doc_b.
+    *
+    * `maxShingleDf`: stop-shingle cap. The inverted-index self-join costs
+    * Σ_shingle df(s)² candidate rows, so one ubiquitous shingle (df ~ N)
+    * degenerates to all-pairs. Shingles with document frequency above the
+    * cap are dropped from the JOIN side only; per-doc set sizes stay
+    * uncapped, so the reported jaccard is a LOWER bound (intersection may
+    * lose capped shingles, union never shrinks) — the `≥ threshold`
+    * filter keeps precision intact and can only lose pairs whose
+    * similarity rests on corpus-ubiquitous (uninformative) shingles.
+    * Candidate rows are then bounded by Σ df² ≤ N_index · maxShingleDf.
+    * The default cap never triggers at gate scale (sf0.01: 500 docs), so
+    * oracle semantics are exact there.
+    *
+    * `idCol` must be unique: per-doc set sizes are group-counts of the
+    * index by id, so two rows sharing an id count as one document
+    * whose shingles are both rows' shingles. */
   def ngramJaccardPairs(docs: DataFrame, n: Int, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text",
-      maxShingleDf: Long = 10000L, persistIndex: Boolean = false): DataFrame = {
+      maxShingleDf: Long = 10000L): DataFrame = {
     // size-adaptive severing — see [[SeverIndexBytesKey]]
-    val bigCorpus = docs.queryExecution.optimizedPlan.stats.sizeInBytes >=
-      BigInt(severIndexBytes(docs))
-    def maybeSever(df: DataFrame): DataFrame =
-      if (bigCorpus) graft.util.Lineage.severTracked(df) else df
+    val maybeSever = severIfBig(docs) _
     val idx = maybeSever(shingleIndex(docs, idCol, textCol, n))
-    // per-doc set sizes: on the severed path, from the index itself —
-    // the index IS the per-doc distinct-shingle set (one row per
-    // (doc, s)), so the group-count equals
-    // size(distinct_shingles(text, n)) for every doc with at least one
-    // shingle, and docs with none cannot appear in `inter` (no index
-    // rows), so the inner joins below see identical inputs. UNCAPPED by
-    // construction (counted before the df-cap). On the small-corpus
-    // path, map-only from the docs (no groupBy over the larger index).
-    val counts =
-      if (bigCorpus) graft.util.Lineage.severTracked(
-        idx.groupBy(col("doc")).agg(count(lit(1)).as("n_sh")))
-      else spread(docs).select(col(idCol).as("doc"),
-        size(org.apache.spark.sql.graft.DistinctShingles
-          .distinct_shingles(col(textCol), n)).cast("long").as("n_sh"))
+    // per-doc set sizes from the index itself, on both paths: the index
+    // IS the per-doc distinct-shingle set (one row per (doc, s)), and
+    // docs with no shingle cannot appear in `inter` (no index rows).
+    // UNCAPPED by construction (counted before the df-cap).
+    val counts = maybeSever(idx.groupBy(col("doc")).agg(count(lit(1)).as("n_sh")))
     // df cap as a window count over the SAME hash-partitioning-by-s the
     // self-join needs anyway; on the severed path computed ONCE and
     // itself severed (both join sides read it)
@@ -535,7 +521,7 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, n: Int, threshold: Double,
       numHashes: Int = 64, bands: Int = 16,
       idCol: String = "doc_id", textCol: String = "text",
-      persistIndex: Boolean = false, salt: Int = 1): DataFrame = {
+      salt: Int = 1): DataFrame = {
     // the candidate set is referenced three times below (two semi-join
     // probes + the verify left side); hard-severed (eager localCheckpoint,
     // [[graft.util.Lineage.sever]]) — it is O(pairs), tiny next to the
@@ -549,18 +535,13 @@ object Dedup {
     // verify ONLY the candidate pairs: bring both docs' distinct-shingle
     // sets to the pair and intersect as arrays — O(|cands|·|sh|), never
     // the full inverted-index pair blowup; sets come from the codegen'd
-    // one-pass expression (same values as array_distinct∘shingles).
-    // persistIndex defaults off: recomputing the codegen'd one-pass
-    // shingle sets is cheaper than a MEMORY_AND_DISK materialization
-    // (sf0.1 measured 0.74 s vs 1.21 s cold).
-    val shSets0 = spread(docs).select(col(idCol).as("doc"),
+    // one-pass expression (same values as array_distinct∘shingles);
+    // recomputing them is cheaper than a MEMORY_AND_DISK
+    // materialization (sf0.1 measured 0.74 s vs 1.21 s cold).
+    val shSets = spread(docs).select(col(idCol).as("doc"),
       org.apache.spark.sql.graft.DistinctShingles
         .distinct_shingles(col(textCol), n).as("sh"))
-    val shSets1 = if (persistIndex)
-      graft.util.IntermediateCaches.track(
-        shSets0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    else shSets0
-    verifyByJaccard(cands, shSets1, threshold)
+    verifyByJaccard(cands, shSets, threshold)
   }
 
   /** Near-dup pairs by shared winnowing fingerprints — the MOSS
@@ -837,17 +818,41 @@ object Dedup {
           .portable_simhash60(norm_text(col(textCol))).as("sh")))
     def block(i: Int): Column =
       shiftright(col("sh"), i * 6).bitwiseAND(lit(63L))
-    val tableKeys: Seq[Column] = (0 until 10).combinations(2).toSeq.map(ij =>
-      shiftleft(block(ij(0)), 6) + block(ij(1)))
-    val banded = fps.select(col("doc"), col("sh"),
-      posexplode(array(tableKeys: _*)).as(Seq("band", "chunk")))
-    banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.chunk") === col("y.chunk") &&
-          col("x.doc") < col("y.doc"))
-      .select(col("x.doc").as("doc_a"), col("y.doc").as("doc_b"),
-        bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).as("hamming"))
+    bandedHammingJoin(fps, (0 until 10).combinations(2).toSeq.map(ij =>
+      shiftleft(block(ij(0)), 6) + block(ij(1))), maxHamming)
+  }
+
+  /** The Manku self-join every Hamming detector shares: each (doc, sh)
+    * row of `fps` explodes into one (band, chunk) key per `tableKeys`
+    * entry, rows sharing a key pair up (and, with `tag`, only rows of
+    * the same tag), and bit_count(xor) ≤ maxHamming verifies. Output:
+    * (doc_a, doc_b[, tag], hamming), deduplicated across bands. */
+  private def bandedHammingJoin(fps: DataFrame, tableKeys: Seq[Column],
+      maxHamming: Int, tag: Option[String] = None): DataFrame = {
+    val banded = fps.select((Seq(col("doc"), col("sh")) ++ tag.map(col) :+
+      posexplode(array(tableKeys: _*)).as(Seq("band", "chunk"))): _*)
+    val sameKey = (tag.toSeq :+ "band" :+ "chunk")
+      .map(c => col(s"x.$c") === col(s"y.$c")).reduce(_ && _)
+    banded.as("x").join(banded.as("y"), sameKey && col("x.doc") < col("y.doc"))
+      .select((Seq(col("x.doc").as("doc_a"), col("y.doc").as("doc_b")) ++
+        tag.map(t => col(s"x.$t").as(t)) :+
+        bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).as("hamming")): _*)
       .distinct()
       .filter(col("hamming") <= maxHamming)
+  }
+
+  /** The Manku table keys for a 64-bit fingerprint at radius
+    * `maxHamming` (the geometry in [[simhashPairs]]). */
+  private def mankuKeys(maxHamming: Int): Seq[Column] = {
+    require(maxHamming >= 0 && maxHamming <= 7,
+      "maxHamming must be in [0,7] (wider radii need >64-bit fingerprints)")
+    def block(i: Int, w: Int): Column =
+      shiftright(col("sh"), i * w).bitwiseAND(lit((1L << w) - 1))
+    if (maxHamming <= 3) (0 until 4).map(block(_, 16))
+    else if (maxHamming <= 6)
+      (0 until 8).combinations(2).toSeq.map(ij =>
+        shiftleft(block(ij(0), 8), 8) + block(ij(1), 8))
+    else (0 until 8).map(block(_, 8))
   }
 
   /** The Manku banding + Hamming verify over PRECOMPUTED 64-bit
@@ -858,27 +863,8 @@ object Dedup {
     * EXACT by the pigeonhole guarantee (recall 1 at the banding stage,
     * precision restored by the bit_count verify), so a brute-force
     * Hamming join is a valid oracle for the banded plan. */
-  def hammingPairs(fps: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      "maxHamming must be in [0,7] (wider radii need >64-bit fingerprints)")
-    def block(i: Int, w: Int): Column =
-      shiftright(col("sh"), i * w).bitwiseAND(lit((1L << w) - 1))
-    val tableKeys: Seq[Column] =
-      if (maxHamming <= 3) (0 until 4).map(block(_, 16))
-      else if (maxHamming <= 6)
-        (0 until 8).combinations(2).toSeq.map(ij =>
-          shiftleft(block(ij(0), 8), 8) + block(ij(1), 8))
-      else (0 until 8).map(block(_, 8))
-    val banded = fps.select(col("doc"), col("sh"),
-      posexplode(array(tableKeys: _*)).as(Seq("band", "chunk")))
-    banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.chunk") === col("y.chunk") &&
-          col("x.doc") < col("y.doc"))
-      .select(col("x.doc").as("doc_a"), col("y.doc").as("doc_b"),
-        bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+  def hammingPairs(fps: DataFrame, maxHamming: Int): DataFrame =
+    bandedHammingJoin(fps, mankuKeys(maxHamming), maxHamming)
 
   /** [[hammingPairs]] over SEVERAL fingerprint families in ONE banded
     * self-join: `fps` carries a `tag` column naming each row's family
@@ -889,26 +875,6 @@ object Dedup {
     * into one). Per-family results are IDENTICAL to N separate
     * [[hammingPairs]] calls by construction (the tag partitions the
     * band space). */
-  def hammingPairsTagged(fps: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      "maxHamming must be in [0,7] (wider radii need >64-bit fingerprints)")
-    def block(i: Int, w: Int): Column =
-      shiftright(col("sh"), i * w).bitwiseAND(lit((1L << w) - 1))
-    val tableKeys: Seq[Column] =
-      if (maxHamming <= 3) (0 until 4).map(block(_, 16))
-      else if (maxHamming <= 6)
-        (0 until 8).combinations(2).toSeq.map(ij =>
-          shiftleft(block(ij(0), 8), 8) + block(ij(1), 8))
-      else (0 until 8).map(block(_, 8))
-    val banded = fps.select(col("doc"), col("sh"), col("tag"),
-      posexplode(array(tableKeys: _*)).as(Seq("band", "chunk")))
-    banded.as("x").join(banded.as("y"),
-        col("x.tag") === col("y.tag") &&
-          col("x.band") === col("y.band") && col("x.chunk") === col("y.chunk") &&
-          col("x.doc") < col("y.doc"))
-      .select(col("x.doc").as("doc_a"), col("y.doc").as("doc_b"), col("x.tag").as("tag"),
-        bit_count(col("x.sh").bitwiseXOR(col("y.sh"))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+  def hammingPairsTagged(fps: DataFrame, maxHamming: Int): DataFrame =
+    bandedHammingJoin(fps, mankuKeys(maxHamming), maxHamming, tag = Some("tag"))
 }

@@ -1792,8 +1792,8 @@ object Streaming {
   def qualityClfStream(s: SparkSession, dir: String,
       queryName: String = "graft_stream_quality_clf",
       extraOptions: Map[String, String] = Map.empty): DataFrame = {
-    import graft.queries.LlmOps
-    val model = LlmOps.qclfModel(s, dir)
+    import graft.queries.{LlmOps, SharedDerivations}
+    val model = SharedDerivations.qclfModel(s, dir)
     val w = model.weightsByEpoch.last
     val wMap = map(model.features.flatMap { case (i, t) =>
       Seq(lit(t), lit(w(i))) }.toIndexedSeq: _*)
@@ -1880,9 +1880,9 @@ object Streaming {
   def qualityClfNgStream(s: SparkSession, dir: String,
       queryName: String = "graft_stream_quality_clf_ng",
       extraOptions: Map[String, String] = Map.empty): DataFrame = {
-    import graft.queries.LlmOps
+    import graft.queries.{LlmOps, SharedDerivations}
     val buckets = LlmOps.QClfNgBuckets
-    val avg = LlmOps.qclfNgWeights(s, dir).transpose.map(_.sum).toArray
+    val avg = SharedDerivations.qclfNgWeights(s, dir).transpose.map(_.sum).toArray
     val wMap = map(avg.zipWithIndex.flatMap { case (v, i) =>
       Seq(lit(i), lit(v)) }.toIndexedSeq: _*)
     val bucket = substring(

@@ -67,12 +67,9 @@ class ArtifactFreshnessSpec extends AnyFunSuite {
 
   private def assertCoversSuite(f: java.io.File, what: String): Unit = {
     val names = benchQueryNames(f)
-    val expected = SparkEntry.queries.keySet +
-      "bpe_learn_shared" + "bpe_bytes_learn_shared" +
-      "bpe_pretok_learn_shared" +
-      "wordpiece_learn_shared" + "unigram_learn_shared" +
-      "quality_clf_learn_shared" + "quality_clf_ng_learn_shared" +
-      "tier_chain_shared"
+    // Bench times every shared derivation as its own line item
+    val expected = SparkEntry.queries.keySet ++
+      graft.queries.SharedDerivations.all.map(_.name)
     val missing = expected -- names
     val extra = names -- expected
     assert(missing.isEmpty && extra.isEmpty,

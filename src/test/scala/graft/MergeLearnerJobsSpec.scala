@@ -1,10 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ListenerBridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.text.{Bpe, WordPiece}
@@ -15,27 +11,6 @@ import graft.text.{Bpe, WordPiece}
 class MergeLearnerJobsSpec extends AnyFunSuite {
   import SharedSpark._
   import spark.implicits._
-
-  /** Spark jobs `body` starts, counted by job group. */
-  private def jobsOf(body: => Unit): Int = {
-    val group = s"merge-learner-jobs-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "merge learner job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      ListenerBridge.waitUntilEmpty(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
 
   private def corpusWordFreq = Tables.documents(spark, sf0001)
     .select(explode(graft.text.tokens(col("text"))).as("word"))

@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBridge
 
 /** One SparkSession shared across all suites (local[4], UTC, AQE on). */
 object SharedSpark {
@@ -19,4 +23,25 @@ object SharedSpark {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001  = "/root/testdata/sf0.01"
   val sf01   = "/root/testdata/sf0.1"
+
+  /** Spark jobs `body` starts, counted by job group. */
+  def jobsOf(body: => Unit): Int = {
+    val group = s"graft-test-jobs-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      ListenerBridge.waitUntilEmpty(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
 }
