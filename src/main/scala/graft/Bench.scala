@@ -111,7 +111,7 @@ object Bench {
         // rounds, opt-in indexes); each run builds a fresh plan =
         // fresh cache entry, so drop them between runs or they
         // accumulate and charge later queries for eviction/GC.
-        // releaseAll covers the RDD-level persists (lineage cuts)
+        // releaseAll covers the RDD-level persists (severed frames)
         // that clearCache cannot see.
         graft.util.IntermediateCaches.releaseAll(blocking = true)
         spark.catalog.clearCache()

@@ -29,7 +29,7 @@ object Verify {
       }
       finally {
         // drop per-query persisted intermediates, incl. the RDD-level
-        // lineage-cut persists clearCache cannot see
+        // severed-frame persists clearCache cannot see
         graft.util.IntermediateCaches.releaseAll(blocking = true)
         spark.catalog.clearCache()
         // hygiene gate: anything still persisted is an operator cache

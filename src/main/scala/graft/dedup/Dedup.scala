@@ -398,19 +398,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
   }
 
-  /** MinHash signature column: `numHashes` minima of seeded xxhash64
-    * shingle hashes, computed in ONE aggregate fold over the shingle
-    * array (evaluating the shingle expression once per element — k
-    * separate array_min(transform(...)) columns would re-evaluate the
-    * input k times). Builtin higher-order functions only, no UDF. */
-  def minhashSignature(shinglesCol: Column, numHashes: Int): Column =
-    aggregate(
-      shinglesCol,
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, s) => zip_with(acc,
-        transform(sequence(lit(0), lit(numHashes - 1)), i => xxhash64(i, s)),
-        (a, b) => least(a, b)))
-
   /** LSH candidate pairs: signatures split into `bands`; docs sharing
     * any full band land in a bucket; bucket join yields candidates.
     * Probabilistic recall — verify candidates with exact Jaccard.
@@ -428,8 +415,7 @@ object Dedup {
     val rows = numHashes / bands
     // codegen'd one-pass signature expression (lowercase + tokenize +
     // shingle + k minima in one tight loop, no separate normalization
-    // pass); the HOF-based minhashSignature stays available for ad-hoc
-    // array inputs
+    // pass)
     val sig = spread(docs)
       .select(col(idCol).as("doc"), org.apache.spark.sql.graft.MinHashSignature
         .minhash_signature(col(textCol), n, numHashes).as("sig"))
@@ -571,89 +557,53 @@ object Dedup {
 
   /** Connected components over a near-dup pair graph — the clustering
     * stage that turns pairwise evidence into duplicate GROUPS (pick one
-    * keeper per component). Two algorithms behind one interface:
+    * keeper per component), by min-label propagation: every node
+    * starts labeled with itself; each round every node takes the
+    * minimum label among itself and its neighbors; fixpoint = component
+    * minima. Rounds needed = graph diameter (one hop per round);
+    * near-dup graphs are overwhelmingly small dense cliques (diameter
+    * ≤ 2–3), and each round is one join + one aggregate. Each round's
+    * labels go through a lazy [[graft.util.Lineage.sever]], so neither
+    * the plan nor the RDD chain grows with the round count: long chains
+    * converge with `maxIters` raised to their diameter.
     *
-    *  - `"minlabel"` (default): min-label propagation — every node
-    *    starts labeled with itself; each round every node takes the
-    *    minimum label among itself and its neighbors; fixpoint =
-    *    component minima. Rounds needed = graph diameter; near-dup
-    *    graphs are overwhelmingly small dense cliques (diameter ≤ 2–3),
-    *    and each round is one join + one aggregate.
-    *  - `"star"`: alternating large-star/small-star contraction
-    *    (Kiveris et al., "Connected Components in MapReduce and
-    *    Beyond", SoCC'14) — each round rewires edges toward local
-    *    minima, collapsing the graph into one star per component in
-    *    O(log²(n)) rounds regardless of diameter. The robust choice for
-    *    adversarial long-chain graphs (a diameter-1000 chain converges
-    *    in ~10 rounds where min-label needs ~1000); costs two
-    *    self-grouping passes per round, so the dense-clique common case
-    *    slightly favors min-label.
-    *
-    * Convergence is detected by a monotonically decreasing label/edge
-    * checksum (one tiny aggregate per round — the only driver-side
-    * value; labels themselves never leave the cluster), accumulated in
-    * decimal(38,0) so Long-overflow aliasing cannot fake a fixpoint.
-    * Non-convergence within `maxIters` THROWS — silently returning
-    * partial clusters would anti-join the wrong losers downstream.
+    * Convergence is detected by a monotonically decreasing label
+    * checksum (one tiny aggregate per round — it is also the job that
+    * materializes the round, and the only driver-side value; labels
+    * themselves never leave the cluster), accumulated in decimal(38,0)
+    * so Long-overflow aliasing cannot fake a fixpoint. Non-convergence
+    * within `maxIters` THROWS — silently returning partial clusters
+    * would anti-join the wrong losers downstream.
     *
     * Output: (node, comp) — comp is the smallest node id reachable.
-    * The returned frame is persisted (it was materialized for the
-    * convergence check) and registered with
-    * [[graft.util.IntermediateCaches]]: release eagerly via
-    * `IntermediateCaches.releaseAll()` after materializing, or let the
-    * ContextCleaner unpersist it once dropped. */
+    * The returned frame is severed (materialized for the convergence
+    * check) and registered with [[graft.util.IntermediateCaches]]:
+    * release via `IntermediateCaches.releaseAll()` after materializing
+    * everything built on it — the release is destructive. */
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_a",
-      bCol: String = "doc_b", maxIters: Int = 20,
-      algorithm: String = "minlabel"): DataFrame = algorithm match {
-    case "minlabel" => ccMinLabel(pairs, aCol, bCol, maxIters)
-    case "star" => ccStarContraction(pairs, aCol, bCol, maxIters)
-    case other => throw new IllegalArgumentException(
-      s"unknown connectedComponents algorithm '$other' (minlabel|star)")
-  }
-
-  private val CacheLvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
-  /** Lineage cut for iterative loops — see [[graft.util.Lineage]]
-    * (promoted to util so the BPE merge learner shares it). Each CC
-    * round references the previous round's frame more than once, so
-    * carried lineage multiplies the logical plan per round and plan
-    * analysis (not data!) blows up in the iteration count even when
-    * persist makes execution incremental. */
-  private def cutLineage(df: DataFrame): (DataFrame, Boolean => Unit) =
-    graft.util.Lineage.cut(df)
-
-  /** Decimal-exact aggregate of a Long column — the per-round
-    * convergence scalar. coalesce: SUM over an empty frame is null; an
-    * empty pair graph must read as converged, not NPE. */
-  private def decimalSum(df: DataFrame, c: String): java.math.BigDecimal =
-    df.agg(coalesce(sum(col(c).cast("decimal(38,0)")),
-        lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")))
-      .head().getDecimal(0)
-
-  private def ccMinLabel(pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int): DataFrame = {
+      bCol: String = "doc_b", maxIters: Int = 20): DataFrame = {
     // both edge directions from ONE evaluation of the (possibly
     // expensive) pairs plan — a union of two selects would run it twice
     val edges = pairs.select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist(CacheLvl)
-    // each round references the previous labels frame TWICE (join
-    // probe + union) — cutLineage keeps the per-round logical plan
-    // constant-size (see its scaladoc)
-    var (labels, releaseLabels) = cutLineage(
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // each round references the previous labels frame TWICE (join probe
+    // + union); decimalSum materializes the severed round, and round
+    // r-1 is released only after that
+    var (labels, releaseLabels) = graft.util.Lineage.sever(
       edges.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("comp")))
+        .select(col("node"), col("node").as("comp")), eager = false)
     var prevSum = decimalSum(labels, "comp")
     var iter = 0
     var done = false
     while (!done && iter < maxIters) {
-      val (next, releaseNext) = cutLineage(
+      val (next, releaseNext) = graft.util.Lineage.sever(
         edges.join(labels, edges("src") === labels("node"))
           .select(edges("dst").as("node"), labels("comp"))
           .union(labels)
-          .groupBy(col("node")).agg(min(col("comp")).as("comp")))
+          .groupBy(col("node")).agg(min(col("comp")).as("comp")), eager = false)
       val s = decimalSum(next, "comp")
       releaseLabels(false)
       labels = next
@@ -666,113 +616,20 @@ object Dedup {
     if (!done) {
       releaseLabels(false)
       throw new IllegalStateException(
-        s"connectedComponents(minlabel) did not converge in $maxIters rounds " +
-          "(graph diameter exceeds the round budget); raise maxIters or use " +
-          "algorithm=\"star\" (O(log² n) rounds regardless of diameter)")
+        s"connectedComponents did not converge in $maxIters rounds " +
+          "(graph diameter exceeds the round budget); raise maxIters")
     }
     graft.util.IntermediateCaches.trackRelease(releaseLabels)
     labels
   }
 
-  /** Alternating large-star/small-star contraction (Kiveris et al.,
-    * SoCC'14 §3). Edges are kept canonical (u < v). Per round:
-    *
-    *  - LARGE-STAR: per node a over its full neighborhood Γ(a), link
-    *    every strictly LARGER neighbor to m = min(Γ(a) ∪ {a}). Every
-    *    edge survives via its smaller endpoint's group, so connectivity
-    *    is preserved while long tails fold toward minima.
-    *  - SMALL-STAR: per node a over its smaller neighbors N = {v < a},
-    *    link N ∪ {a} to m = min(N). Turns the chains large-star left
-    *    behind into stars.
-    *
-    * Fixpoint = one star per component centered at the component
-    * minimum (both steps leave a min-centered star unchanged).
-    * Detected when the canonical edge-set checksum — (count, Σu,
-    * Σ xxhash64(u,v)) with decimal sums — is stable across a full
-    * round. Unlike min-label's label sum there is no monotone potential
-    * here, so the order-independent 64-bit content hash carries the
-    * "sets actually equal" evidence (count+Σu alone can collide). */
-  private def ccStarContraction(pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int): DataFrame = {
-    def canon(df: DataFrame): DataFrame =
-      df.filter(col("u") =!= col("v")).distinct()
-    // symmetrized adjacency (a, b) from canonical edges (u < v)
-    def sym(edges: DataFrame): DataFrame =
-      edges.select(explode(array(
-          struct(col("u").as("a"), col("v").as("b")),
-          struct(col("v").as("a"), col("u").as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-    def largeStar(edges: DataFrame): DataFrame = {
-      val adj = sym(edges)
-      val mins = adj.groupBy(col("a"))
-        .agg(min(col("b")).as("mb"))
-        .select(col("a"), least(col("a"), col("mb")).as("m"))
-      // v > a ≥ m ⇒ emitted edge (m, v) is already canonical
-      canon(adj.join(mins, "a").filter(col("b") > col("a"))
-        .select(col("m").as("u"), col("b").as("v")))
-    }
-    def smallStar(edges: DataFrame): DataFrame = {
-      val smaller = sym(edges).filter(col("b") < col("a"))
-      val mins = smaller.groupBy(col("a")).agg(min(col("b")).as("m"))
-      // (v, m) for v ∈ N plus (a, m); m = min(N) < a and m ≤ b ∀ b ∈ N
-      canon(smaller.join(mins, "a")
-        .select(col("m").as("u"), col("b").as("v"))
-        .union(mins.select(col("m").as("u"), col("a").as("v"))))
-    }
-    def checksum(edges: DataFrame): (Long, java.math.BigDecimal, java.math.BigDecimal) = {
-      val zero = lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")
-      val r = edges.agg(count(lit(1)),
-        coalesce(sum(col("u").cast("decimal(38,0)")), zero),
-        coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")), zero)).head()
-      (r.getLong(0), r.getDecimal(1), r.getDecimal(2))
-    }
-    // large-star + small-star each reference the incoming edge frame
-    // several times (adjacency explode + min join-back) — carried
-    // lineage would multiply the logical plan ~4× per round, so each
-    // round goes through cutLineage (see its scaladoc)
-    var (edges, releaseEdges) = cutLineage(
-      canon(pairs.select(
-        least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))))
-    // all graph nodes, captured BEFORE contraction rewires edges (the
-    // star fixpoint drops no nodes, but the labels join below needs the
-    // original node set anyway for the (center, center) self-rows);
-    // materialized eagerly so it never re-runs the pair detector
-    val (nodes, releaseNodes) = cutLineage(
-      edges.select(col("u").as("node"))
-        .union(edges.select(col("v").as("node"))).distinct())
-    nodes.count()
-    var prev = checksum(edges)
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIters) {
-      val (next, releaseNext) = cutLineage(smallStar(largeStar(edges)))
-      val s = checksum(next)
-      releaseEdges(false)
-      edges = next
-      releaseEdges = releaseNext
-      done = s._1 == prev._1 && s._2.compareTo(prev._2) == 0 &&
-        s._3.compareTo(prev._3) == 0
-      prev = s
-      iter += 1
-    }
-    if (!done) {
-      releaseEdges(false)
-      releaseNodes(false)
-      throw new IllegalStateException(
-        s"connectedComponents(star) did not converge in $maxIters rounds; " +
-          "raise maxIters")
-    }
-    // fixpoint edges are (center=u, leaf=v) stars; centers label themselves
-    val (labels, releaseLabels) = cutLineage(nodes
-      .join(edges.select(col("v").as("node"), col("u").as("lbl")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("lbl"), col("node")).as("comp")))
-    labels.count()
-    releaseEdges(false)
-    releaseNodes(false)
-    graft.util.IntermediateCaches.trackRelease(releaseLabels)
-    labels
-  }
+  /** Decimal-exact aggregate of a Long column — the per-round
+    * convergence scalar. coalesce: SUM over an empty frame is null; an
+    * empty pair graph must read as converged, not NPE. */
+  private def decimalSum(df: DataFrame, c: String): java.math.BigDecimal =
+    df.agg(coalesce(sum(col(c).cast("decimal(38,0)")),
+        lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")))
+      .head().getDecimal(0)
 
   /** SimHash near-dup pairs: one 64-bit fingerprint per doc, bucketed
     * with a Manku-style multi-table banding (Detecting Near-Duplicates

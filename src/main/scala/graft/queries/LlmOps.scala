@@ -1796,18 +1796,6 @@ object LlmOps {
        |WHERE ((vec_id + 1000000000) // 60) * 60 + 60 <= (SELECT w FROM wm)
        |ORDER BY vec_id""".stripMargin
 
-  /** Cross-modality dedup capstone — TEXT near-dup removal and
-    * EMBEDDING semantic-dup removal composed over the same corpus
-    * (doc_id ≡ vec_id where embeddings exist, the partial-coverage
-    * reality of a production corpus): the MinHash-LSH + CC text
-    * detector ([[dedupCorpus]]'s chain) and SemDeDup
-    * ([[graft.similarity.Ann.semDedup]]) each produce a removal list in
-    * their own banded/celled scale shape; removal is their UNION (the
-    * d_dup_union evidence discipline, applied cross-modality), executed
-    * as id-keyed semi/anti joins. Output: the per-language funnel card
-    * — corpus in, removed-by-text, removed-by-semantic (overlap counts
-    * in both), kept count + id sum. The oracle replays BOTH closures
-    * (two recursive CCs in one WITH RECURSIVE) and the union removal. */
   /** Stage frames for [[pipelineSemantic]] — staged-verification twin
     * of [[pipelineE2eStages]]. */
   private[graft] case class SemanticStages(textPairs: DataFrame,
@@ -1841,6 +1829,18 @@ object LlmOps {
     SemanticStages(textPairs, textLosers, semLosers, card)
   }
 
+  /** Cross-modality dedup capstone — TEXT near-dup removal and
+    * EMBEDDING semantic-dup removal composed over the same corpus
+    * (doc_id ≡ vec_id where embeddings exist, the partial-coverage
+    * reality of a production corpus): the MinHash-LSH + CC text
+    * detector ([[dedupCorpus]]'s chain) and SemDeDup
+    * ([[graft.similarity.Ann.semDedup]]) each produce a removal list in
+    * their own banded/celled scale shape; removal is their UNION (the
+    * d_dup_union evidence discipline, applied cross-modality), executed
+    * as id-keyed semi/anti joins. Output: the per-language funnel card
+    * — corpus in, removed-by-text, removed-by-semantic (overlap counts
+    * in both), kept count + id sum. The oracle replays BOTH closures
+    * (two recursive CCs in one WITH RECURSIVE) and the union removal. */
   def pipelineSemantic(s: SparkSession, dir: String): DataFrame =
     pipelineSemanticStages(s, dir).card
 
@@ -4250,25 +4250,6 @@ object LlmOps {
   private val UnigramMultiPieces = 24
   private val UnigramInf = java.lang.Long.MAX_VALUE / 4
 
-  /** Corpus-derived integer-scored piece vocabulary — the
-    * SentencePiece seed-vocab construction reduced to its
-    * deterministic core: candidates are all code-point substrings of
-    * vocabulary words up to length [[UnigramMaxPieceLen]], frequency =
-    * Σ word_freq · occurrences; the vocabulary keeps ALL single code
-    * points (every word stays segmentable) plus the top
-    * [[UnigramMultiPieces]] multi-char pieces by (freq DESC, piece
-    * ASC). Scores are micro-unit integer surrogates of −log p:
-    * cost(p) = (bitlen(total) − bitlen(freq_p))·10⁶ + 1000 — bit
-    * length is an EXACT integer floor-log2 both engines agree on
-    * (`len(bin(x))` in SQL, 64 − numberOfLeadingZeros here), where a
-    * transcendental log could flip a DP tie cross-engine (the
-    * dsirSample linear-squash precedent). OOV floor: an unknown
-    * single code point costs (bitlen(total)+10)·10⁶.
-    *
-    * Scale shape: substring generation + piece counts are one
-    * vocabulary-sized aggregation (map-side combined); the selected
-    * table is tokenizer-sized by contract and rides to executors as a
-    * codegen reference object (the BPE-merge discipline). */
   /** Unsigned UTF-8 byte ordering — the collation DuckDB (and Spark's
     * UTF8String) order strings by. Driver-side vocabulary tie-breaks
     * MUST use it: java.lang.String.compareTo orders by UTF-16 code
@@ -4325,6 +4306,25 @@ object LlmOps {
       (blen(tot) + 10L) * 1000000L)
   }
 
+  /** Corpus-derived integer-scored piece vocabulary — the
+    * SentencePiece seed-vocab construction reduced to its
+    * deterministic core: candidates are all code-point substrings of
+    * vocabulary words up to length [[UnigramMaxPieceLen]], frequency =
+    * Σ word_freq · occurrences; the vocabulary keeps ALL single code
+    * points (every word stays segmentable) plus the top
+    * [[UnigramMultiPieces]] multi-char pieces by (freq DESC, piece
+    * ASC). Scores are micro-unit integer surrogates of −log p:
+    * cost(p) = (bitlen(total) − bitlen(freq_p))·10⁶ + 1000 — bit
+    * length is an EXACT integer floor-log2 both engines agree on
+    * (`len(bin(x))` in SQL, 64 − numberOfLeadingZeros here), where a
+    * transcendental log could flip a DP tie cross-engine (the
+    * dsirSample linear-squash precedent). OOV floor: an unknown
+    * single code point costs (bitlen(total)+10)·10⁶.
+    *
+    * Scale shape: substring generation + piece counts are one
+    * vocabulary-sized aggregation (map-side combined); the selected
+    * table is tokenizer-sized by contract and rides to executors as a
+    * codegen reference object (the BPE-merge discipline). */
   private def unigramVocab(s: SparkSession, dir: String): (Seq[(String, Long)], Long) =
     unigramCosts(SharedDerivations.unigramCensus(s, dir))
 
@@ -4356,13 +4356,6 @@ object LlmOps {
       .orderBy(col("word"))
   }
 
-  /** Oracle: vocabulary CTEs (substring census → single-chars + top-K
-    * multi → bit-length scores → one MAP value), then the Viterbi DP
-    * as a recursive CTE per word (dp/backpointer lists grow one
-    * position per iteration; candidates are a `list_transform` over
-    * the ≤ maxPieceLen lookback window, argmin via `list_sort` on
-    * (cost, j) — the same longest-final-piece tie-break), then a
-    * second recursion backtracking the piece sequence. */
   /** The vocabulary-census CTEs (w0/sub/pf) shared by every unigram
     * oracle. */
   private val UnigramCensusCtes: String = {
@@ -4426,6 +4419,13 @@ object LlmOps {
        |                                ORDER BY f DESC, piece LIMIT $UnigramMultiPieces)),
        |""".stripMargin + unigramDpCtes("", "vocab")
 
+  /** Oracle: vocabulary CTEs (substring census → single-chars + top-K
+    * multi → bit-length scores → one MAP value), then the Viterbi DP
+    * as a recursive CTE per word (dp/backpointer lists grow one
+    * position per iteration; candidates are a `list_transform` over
+    * the ≤ maxPieceLen lookback window, argmin via `list_sort` on
+    * (cost, j) — the same longest-final-piece tie-break), then a
+    * second recursion backtracking the piece sequence. */
   val unigramEncodeSql: String =
     s"""WITH RECURSIVE
        |$UnigramChainCtes
@@ -5002,41 +5002,6 @@ object LlmOps {
 
   // ------------------------------------------------ end-to-end pipeline
 
-  /** The CAPSTONE composition: the full corpus-assembly pipeline in one
-    * program — quality/exact-dup filter → MinHash-LSH near-dup removal →
-    * benchmark decontamination → target-mixture rebalance → deterministic
-    * global shuffle → sequence packing — emitting a per-stage funnel card
-    * (stage, n_docs, id_sum, n_tokens). Every stage is an individually
-    * oracled operator elsewhere in this file; what THIS gate proves is
-    * that they compose in one plan without pipeline breakers:
-    *
-    *  - The corpus parquet is scanned once for the pipeline trunk: the
-    *    scored+filtered frame (stage 1) is persisted, and the near-dup
-    *    detector, the dedup anti-join, the decontamination shingling and
-    *    every card aggregate all fan out over that cache (the only other
-    *    scan is the dimension-sized benchmark slice, which is external
-    *    input by definition).
-    *  - Raw text never enters a cache: stage 1 distills every
-    *    text-derived quantity the rest of the pipeline needs — MinHash
-    *    signature, 3-shingle hash set, 4-gram hash set (all codegen'd
-    *    one-pass expressions) — into primitive long-array columns in
-    *    the SAME projection, so the detector, the decontamination join
-    *    and every card aggregate read packed longs from the columnar
-    *    cache; the post-decontamination persist is down to four narrow
-    *    scalar columns.
-    *  - Operator-internal persists (LSH candidates, CC labels, both
-    *    stage caches here) all register with
-    *    [[graft.util.IntermediateCaches]]; the driver releases them
-    *    after materializing, and ScaleSpec asserts nothing leaks.
-    *
-    * Stage parameters: quality floor 0.4 (keeps every language populated
-    * — the mixture stage needs all five strata), detector = the 100 TB
-    * MinHash-LSH path (n=3, τ=0.5, same recall argument as
-    * [[dedupMinhashLsh]]), benchmark = the raw doc_id % 20 slice with
-    * n=4 grams (as [[decontam]]), recipe = 40/15/15/15/15 (as
-    * [[domainMix]]), pack budget 256 in shuffle-rank order (the
-    * "shuffled layout" contract of
-    * [[graft.corpus.Corpus.packSequences]]). */
   /** The e2e pipeline's stage frames, exposed for STAGED verification:
     * the sf1 monolithic DuckDB replay exceeds its temp budget, so the
     * scale oracle materializes each stage's output to parquet and
@@ -5124,6 +5089,41 @@ object LlmOps {
     E2eStages(filt, pairs, dd, clean, mixed, packs)
   }
 
+  /** The CAPSTONE composition: the full corpus-assembly pipeline in one
+    * program — quality/exact-dup filter → MinHash-LSH near-dup removal →
+    * benchmark decontamination → target-mixture rebalance → deterministic
+    * global shuffle → sequence packing — emitting a per-stage funnel card
+    * (stage, n_docs, id_sum, n_tokens). Every stage is an individually
+    * oracled operator elsewhere in this file; what THIS gate proves is
+    * that they compose in one plan without pipeline breakers:
+    *
+    *  - The corpus parquet is scanned once for the pipeline trunk: the
+    *    scored+filtered frame (stage 1) is persisted, and the near-dup
+    *    detector, the dedup anti-join, the decontamination shingling and
+    *    every card aggregate all fan out over that cache (the only other
+    *    scan is the dimension-sized benchmark slice, which is external
+    *    input by definition).
+    *  - Raw text never enters a cache: stage 1 distills every
+    *    text-derived quantity the rest of the pipeline needs — MinHash
+    *    signature, 3-shingle hash set, 4-gram hash set (all codegen'd
+    *    one-pass expressions) — into primitive long-array columns in
+    *    the SAME projection, so the detector, the decontamination join
+    *    and every card aggregate read packed longs from the columnar
+    *    cache; the post-decontamination persist is down to four narrow
+    *    scalar columns.
+    *  - Operator-internal persists (LSH candidates, CC labels, both
+    *    stage caches here) all register with
+    *    [[graft.util.IntermediateCaches]]; the driver releases them
+    *    after materializing, and ScaleSpec asserts nothing leaks.
+    *
+    * Stage parameters: quality floor 0.4 (keeps every language populated
+    * — the mixture stage needs all five strata), detector = the 100 TB
+    * MinHash-LSH path (n=3, τ=0.5, same recall argument as
+    * [[dedupMinhashLsh]]), benchmark = the raw doc_id % 20 slice with
+    * n=4 grams (as [[decontam]]), recipe = 40/15/15/15/15 (as
+    * [[domainMix]]), pack budget 256 in shuffle-rank order (the
+    * "shuffled layout" contract of
+    * [[graft.corpus.Corpus.packSequences]]). */
   def pipelineE2e(s: SparkSession, dir: String): DataFrame =
     pipelineE2eCard(pipelineE2eStages(s, dir))
 
@@ -5431,34 +5431,6 @@ object LlmOps {
          |LEFT JOIN k USING (lang)
          |ORDER BY lang""".stripMargin)
 
-  /** Span-cleaning pipeline capstone — the round-9 operators COMPOSED:
-    * span-level exact dedup ([[graft.dedup.Dedup.duplicateSpans]]
-    * semantics, Lee et al. 2022) applied as a REMOVAL stage, with the
-    * quality cutoff driven by the bounded-state histogram quantile
-    * sketch ([[graft.sketch.Sketch.histSketch]]) instead of an exact
-    * order statistic. Program:
-    *
-    *  1. stage the corpus ONCE: per doc — ntok, quality, the positional
-    *     8-gram 60-bit hashes (`g8`) and per-position token hashes
-    *     (`ph`), all primitive long arrays (raw text never enters the
-    *     cache — the t_pipeline_e2e discipline);
-    *  2. span detection over `g8`: cross-doc duplicated grams → per-doc
-    *     merged removal intervals → tokens removed per doc;
-    *  3. quality threshold = the corpus P25 from a 256-bucket histogram
-    *     sketch — at 100 TB the exact percentile is a full sort, the
-    *     sketch is one bounded aggregation (this is qualityCutoff's
-    *     documented production swap, now actually exercised);
-    *  4. survivors (quality ≥ sketch cutoff) emit a per-language card:
-    *     doc/id/token totals with span-adjusted `n_tokens_clean`, the
-    *     cutoff itself, and `clean_fp` — a bit_xor fingerprint of the
-    *     (position|token) hashes OUTSIDE removal spans, which pins the
-    *     actual cleaned text content, not just its length (XOR is
-    *     order-invariant, so both engines agree whatever the plan).
-    *
-    * Everything is exact integer/hash logic plus the fixed-order float
-    * ops shared with the quantile gate, so the DuckDB oracle replays
-    * the whole chain bit-for-bit. One corpus scan, plan-asserted in
-    * LlmOpsSpec. */
   /** Stage frames for [[pipelineSpans]] — staged-verification twin of
     * [[pipelineE2eStages]]. `filtNarrow` drops the g8/ph arrays (the
     * staged artifact carries doc_id/lang/ntok/quality; the arrays are
@@ -5533,6 +5505,34 @@ object LlmOps {
       merged, cut, card)
   }
 
+  /** Span-cleaning pipeline capstone — the span operators COMPOSED:
+    * span-level exact dedup ([[graft.dedup.Dedup.duplicateSpans]]
+    * semantics, Lee et al. 2022) applied as a REMOVAL stage, with the
+    * quality cutoff driven by the bounded-state histogram quantile
+    * sketch ([[graft.sketch.Sketch.histSketch]]) instead of an exact
+    * order statistic. Program:
+    *
+    *  1. stage the corpus ONCE: per doc — ntok, quality, the positional
+    *     8-gram 60-bit hashes (`g8`) and per-position token hashes
+    *     (`ph`), all primitive long arrays (raw text never enters the
+    *     cache — the t_pipeline_e2e discipline);
+    *  2. span detection over `g8`: cross-doc duplicated grams → per-doc
+    *     merged removal intervals → tokens removed per doc;
+    *  3. quality threshold = the corpus P25 from a 256-bucket histogram
+    *     sketch — at 100 TB the exact percentile is a full sort, the
+    *     sketch is one bounded aggregation (this is qualityCutoff's
+    *     documented production swap, now actually exercised);
+    *  4. survivors (quality ≥ sketch cutoff) emit a per-language card:
+    *     doc/id/token totals with span-adjusted `n_tokens_clean`, the
+    *     cutoff itself, and `clean_fp` — a bit_xor fingerprint of the
+    *     (position|token) hashes OUTSIDE removal spans, which pins the
+    *     actual cleaned text content, not just its length (XOR is
+    *     order-invariant, so both engines agree whatever the plan).
+    *
+    * Everything is exact integer/hash logic plus the fixed-order float
+    * ops shared with the quantile gate, so the DuckDB oracle replays
+    * the whole chain bit-for-bit. One corpus scan, plan-asserted in
+    * LlmOpsSpec. */
   def pipelineSpans(s: SparkSession, dir: String): DataFrame =
     pipelineSpansStages(s, dir).card
 
@@ -5961,23 +5961,6 @@ object LlmOps {
        |   AND (n_stop >= 2)) AS keep
        |FROM m ORDER BY doc_id""".stripMargin
 
-  /** Bloom-filter incremental dedup — the O(1)-STATE answer to
-    * [[dedupIncremental]]'s fingerprint index: at 100 TB of ingest the
-    * exact index is O(distinct fingerprints) (tens of billions of
-    * 16-byte rows); a Bloom filter holds the same membership signal in
-    * m = 8n BITS with a measured, constant false-positive rate and NO
-    * false negatives — the classic crawl-frontier / seen-set trade
-    * (Bloom 1970; Broder & Mitzenmacher's survey). k = 4, m = 8n ⇒
-    * fill ≈ 1−e^(−k·n/m) ≈ 0.39, FPR ≈ fill⁴ ≈ 2.3% at EVERY corpus
-    * size — the gate emits per-doc (bloom_hit, exact_hit, verdict
-    * tp/fp/tn) so the oracle pins the exact bit arithmetic AND the
-    * spec asserts the no-false-negative law + the FPR envelope.
-    *
-    * Scale shape: the bit table is ≤ min(k·n, m) rows (bounded);
-    * probing is a broadcast join while the filter broadcasts and a
-    * position-keyed shuffle join (sharded Bloom) past that. The batch
-    * composition is [[dedupIncremental]]'s (fresh + planted re-crawls
-    * at collision-proof ids). */
   /** k hash rows for every Bloom gate; m = [[bloomM]](n). */
   private[graft] val BloomK = 4
 
@@ -6014,6 +5997,23 @@ object LlmOps {
       .orderBy(col("doc_id"))
   }
 
+  /** Bloom-filter incremental dedup — the O(1)-STATE answer to
+    * [[dedupIncremental]]'s fingerprint index: at 100 TB of ingest the
+    * exact index is O(distinct fingerprints) (tens of billions of
+    * 16-byte rows); a Bloom filter holds the same membership signal in
+    * m = 8n BITS with a measured, constant false-positive rate and NO
+    * false negatives — the classic crawl-frontier / seen-set trade
+    * (Bloom 1970; Broder & Mitzenmacher's survey). k = 4, m = 8n ⇒
+    * fill ≈ 1−e^(−k·n/m) ≈ 0.39, FPR ≈ fill⁴ ≈ 2.3% at EVERY corpus
+    * size — the gate emits per-doc (bloom_hit, exact_hit, verdict
+    * tp/fp/tn) so the oracle pins the exact bit arithmetic AND the
+    * spec asserts the no-false-negative law + the FPR envelope.
+    *
+    * Scale shape: the bit table is ≤ min(k·n, m) rows (bounded);
+    * probing is a broadcast join while the filter broadcasts and a
+    * position-keyed shuffle join (sharded Bloom) past that. The batch
+    * composition is [[dedupIncremental]]'s (fresh + planted re-crawls
+    * at collision-proof ids). */
   def dedupBloom(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val pb = plantBase(docs)
@@ -6238,22 +6238,6 @@ object LlmOps {
       s"(($a >> $i) & 1) * ${1L << (2 * i)} + (($b >> $i) & 1) * ${1L << (2 * i + 1)}"
     }.mkString(" + ")
 
-  /** Z-order layout manifest — multi-dimensional clustering for data
-    * skipping (the lakehouse OPTIMIZE ZORDER shape): interleave the
-    * bits of two skipping dimensions (quality bucket 0..255, token
-    * count capped at 255) into a 16-bit Morton code, assign docs to
-    * files by the code's top 10 bits (z >> 6), and emit the per-file
-    * min/max manifest a scan would prune against. The interleave
-    * GUARANTEES locality: fixing the top 10 z-bits fixes the top 5
-    * bits of BOTH dims, so every file spans < 8 quality buckets AND
-    * < 8 token buckets (spec-asserted) — a single-dim sort would give
-    * perfect quality ranges but arbitrary token ranges.
-    *
-    * Scale shape: the code is map-only integer bit math; the manifest
-    * is one map-side-combined aggregate with ≤ 1024 rows. At 100 TB
-    * the write path is repartitionByRange(z) → sortWithinPartitions(z)
-    * → write, and THIS manifest is the skipping index. z_sum/id_sum
-    * pin file membership and every z value through the aggregate. */
   /** Per-doc z-order frame: (doc_id, qb, nb, z, fid) — the rows a
     * layout writer partitions by `fid`; [[zorderLayout]] aggregates it
     * into the manifest, [[zorderWriteCommit]] physically writes it. */
@@ -6277,18 +6261,25 @@ object LlmOps {
         sum(col("z")).as("z_sum"), sum(col("doc_id")).as("id_sum"))
       .orderBy(col("fid"))
 
+  /** Z-order layout manifest — multi-dimensional clustering for data
+    * skipping (the lakehouse OPTIMIZE ZORDER shape): interleave the
+    * bits of two skipping dimensions (quality bucket 0..255, token
+    * count capped at 255) into a 16-bit Morton code, assign docs to
+    * files by the code's top 10 bits (z >> 6), and emit the per-file
+    * min/max manifest a scan would prune against. The interleave
+    * GUARANTEES locality: fixing the top 10 z-bits fixes the top 5
+    * bits of BOTH dims, so every file spans < 8 quality buckets AND
+    * < 8 token buckets (spec-asserted) — a single-dim sort would give
+    * perfect quality ranges but arbitrary token ranges.
+    *
+    * Scale shape: the code is map-only integer bit math; the manifest
+    * is one map-side-combined aggregate with ≤ 1024 rows. At 100 TB
+    * the write path is repartitionByRange(z) → sortWithinPartitions(z)
+    * → write, and THIS manifest is the skipping index. z_sum/id_sum
+    * pin file membership and every z value through the aggregate. */
   def zorderLayout(s: SparkSession, dir: String): DataFrame =
     zorderManifest(zorderDocs(s, dir))
 
-  /** The z-order layout physically EXECUTED: the per-doc frame is
-    * written `partitionBy(fid)` — one directory per layout file, the
-    * real clustered-write shape — THROUGH the cloud committers
-    * (job-commit counter asserted, the t_pack_write_commit
-    * discipline), then re-read and re-aggregated. The gate shares
-    * [[zorderLayoutSql]]: the manifest recomputed FROM THE WRITTEN
-    * ARTIFACT must equal the planned manifest bit-for-bit, which a
-    * dropped row, a mis-partitioned doc, or a silently-defaulted
-    * committer would each break. */
   /** Gate-run temp dirs, recursively deleted at JVM exit (round-11
     * advice: per-run dirs must not accumulate across runs). */
   private val tempDirsToDelete =
@@ -6309,6 +6300,15 @@ object LlmOps {
     p.toFile.getAbsolutePath
   }
 
+  /** The z-order layout physically EXECUTED: the per-doc frame is
+    * written `partitionBy(fid)` — one directory per layout file, the
+    * real clustered-write shape — THROUGH the cloud committers
+    * (job-commit counter asserted, the t_pack_write_commit
+    * discipline), then re-read and re-aggregated. The gate shares
+    * [[zorderLayoutSql]]: the manifest recomputed FROM THE WRITTEN
+    * ARTIFACT must equal the planned manifest bit-for-bit, which a
+    * dropped row, a mis-partitioned doc, or a silently-defaulted
+    * committer would each break. */
   def zorderWriteCommit(s: SparkSession, dir: String): DataFrame =
     // per-run unique dir: two concurrent gate runs in one JVM/tmpdir
     // must not clobber each other's artifacts (round-10 advice); no
@@ -7207,55 +7207,6 @@ object LlmOps {
        |WHERE len(list_filter(range(0, 64), j -> x.b[j + 1] <> y.b[j + 1])) <= 6
        |ORDER BY asset_a, asset_b""".stripMargin
 
-  /** The MULTIMODAL dedup capstone — one consistently-planted asset
-    * universe run through all four asset-level detectors, evidence
-    * unioned, connected components over the union, one summary row per
-    * duplicate group. The asset counterpart of [[dedupEvidenceUnion]] ∘
-    * [[dedupGroups]]: a production media store runs exactly this chain
-    * (content-address exact dedup catching bit-identical re-uploads,
-    * perceptual detectors catching re-encodes/edits, one clustering
-    * over whichever evidence fired).
-    *
-    * Detectors (all reading ONE cached fingerprint trunk — text is
-    * scanned once and never shuffles; only ids, 16-byte md5s and 8-byte
-    * contours move):
-    *  - EXACT: content-address groups on (kind, md5, octet length) —
-    *    [[mmDedup]]'s key — emitted as star edges (group-min keeper →
-    *    member), so the edge count per k-group is k−1, not k², and the
-    *    components are identical to the clique formulation.
-    *  - IMAGE contour: [[mmPhash]]'s surrogate raster → [[contour64]] →
-    *    Hamming ≤ 6 banding (recall 1 by pigeonhole).
-    *  - AUDIO contour: [[mmAudioFp]]'s surrogate energies (gain 1) →
-    *    same banding.
-    *  - VIDEO contour: [[mmVideoFp]]'s surrogate frame sizes (gain 1)
-    *    → same banding — all three modalities now have a perceptual
-    *    detector (round 13; video previously reached only exact).
-    *
-    * Plants (one scheme for the whole universe, so the four detectors
-    * see the SAME planted truth — unlike unioning the per-gate queries,
-    * whose independent +plantBase offsets would alias unrelated planted
-    * assets onto one id):
-    *  - class A (+plantBase): byte-identical re-uploads of every
-    *    asset_id ≡ 1 (mod 4), all modalities — caught by EXACT, and by
-    *    the perceptual detectors too at Hamming 0 (counted in both, the
-    *    agreeing-evidence shape).
-    *  - class B (+2·plantBase): token-4 edits — images ≡ 0 (mod 6) with
-    *    ≥ 37 tokens (≤ 4 contour bits), audio ≡ 7 (mod 10) with ≥ 65
-    *    tokens (≤ 2 bits), video ≡ 9 (mod 10) with ≥ 65 tokens (≤ 2
-    *    bits) — caught ONLY by their perceptual detector (the md5
-    *    differs), which is the evidence-union's reason to exist.
-    *
-    * Output: per duplicate group — keeper (min asset id = component
-    * label), member count, id checksum, and the distinct pair count per
-    * evidence type (the audit trail a removal job commits). The oracle
-    * replays every stage: surrogate fingerprints by the md5 hash
-    * convention, pairing by brute-force Hamming join (equal to the
-    * banded plan at radius ≤ 6), clustering by recursive-CTE closure.
-    *
-    * Scale shape: one corpus scan into the cached narrow trunk; the
-    * exact detector is one (kind, fp, len)-keyed window; each
-    * perceptual detector is the 28-table band-key self-join; clustering
-    * iterates over the pair-evidence-sized edge set only. */
   /** Asset-space SEMANTIC dedup (mm_semdedup): the [[semDedup]]
     * IVF∘cosine∘connected-components machinery pointed at the
     * multimodal embedding column — SemDeDup for the asset universe,
@@ -7339,6 +7290,55 @@ object LlmOps {
        |JOIN ea ON ea.asset_id = g.node
        |WHERE g.node <> g.comp ORDER BY asset_id""".stripMargin
 
+  /** The MULTIMODAL dedup capstone — one consistently-planted asset
+    * universe run through all four asset-level detectors, evidence
+    * unioned, connected components over the union, one summary row per
+    * duplicate group. The asset counterpart of [[dedupEvidenceUnion]] ∘
+    * [[dedupGroups]]: a production media store runs exactly this chain
+    * (content-address exact dedup catching bit-identical re-uploads,
+    * perceptual detectors catching re-encodes/edits, one clustering
+    * over whichever evidence fired).
+    *
+    * Detectors (all reading ONE cached fingerprint trunk — text is
+    * scanned once and never shuffles; only ids, 16-byte md5s and 8-byte
+    * contours move):
+    *  - EXACT: content-address groups on (kind, md5, octet length) —
+    *    [[mmDedup]]'s key — emitted as star edges (group-min keeper →
+    *    member), so the edge count per k-group is k−1, not k², and the
+    *    components are identical to the clique formulation.
+    *  - IMAGE contour: [[mmPhash]]'s surrogate raster → [[contour64]] →
+    *    Hamming ≤ 6 banding (recall 1 by pigeonhole).
+    *  - AUDIO contour: [[mmAudioFp]]'s surrogate energies (gain 1) →
+    *    same banding.
+    *  - VIDEO contour: [[mmVideoFp]]'s surrogate frame sizes (gain 1)
+    *    → same banding — all three modalities have a perceptual
+    *    detector.
+    *
+    * Plants (one scheme for the whole universe, so the four detectors
+    * see the SAME planted truth — unlike unioning the per-gate queries,
+    * whose independent +plantBase offsets would alias unrelated planted
+    * assets onto one id):
+    *  - class A (+plantBase): byte-identical re-uploads of every
+    *    asset_id ≡ 1 (mod 4), all modalities — caught by EXACT, and by
+    *    the perceptual detectors too at Hamming 0 (counted in both, the
+    *    agreeing-evidence shape).
+    *  - class B (+2·plantBase): token-4 edits — images ≡ 0 (mod 6) with
+    *    ≥ 37 tokens (≤ 4 contour bits), audio ≡ 7 (mod 10) with ≥ 65
+    *    tokens (≤ 2 bits), video ≡ 9 (mod 10) with ≥ 65 tokens (≤ 2
+    *    bits) — caught ONLY by their perceptual detector (the md5
+    *    differs), which is the evidence-union's reason to exist.
+    *
+    * Output: per duplicate group — keeper (min asset id = component
+    * label), member count, id checksum, and the distinct pair count per
+    * evidence type (the audit trail a removal job commits). The oracle
+    * replays every stage: surrogate fingerprints by the md5 hash
+    * convention, pairing by brute-force Hamming join (equal to the
+    * banded plan at radius ≤ 6), clustering by recursive-CTE closure.
+    *
+    * Scale shape: one corpus scan into the cached narrow trunk; the
+    * exact detector is one (kind, fp, len)-keyed window; each
+    * perceptual detector is the 28-table band-key self-join; clustering
+    * iterates over the pair-evidence-sized edge set only. */
   def mmDupUnion(s: SparkSession, dir: String): DataFrame = {
     val pb = plantBase(Tables.documents(s, dir))
     val a0 = graft.util.Partitioning.spreadIfNarrow(Tables.documents(s, dir))
@@ -9354,8 +9354,6 @@ object LlmOps {
       .orderBy(col("doc_id"))
   }
 
-  /** Oracle = [[UrlCanonCtes]] (for the domain key) + [[LinkRankCtes]]
-    * (for the ranks) + the rollup, tier window and join back. */
   /** LinkRank rollup to the domain tier table (`byd`/`rolled`/`tiers`;
     * depends on `curls` from [[UrlCanonCtes]]) — shared by
     * [[domainRankSql]] and [[pipelineScheduleSql]]. */
@@ -9370,6 +9368,8 @@ object LlmOps {
        |    CAST(ntile(4) OVER (ORDER BY rank_sum DESC, domain) AS BIGINT) AS tier
        |  FROM rolled)""".stripMargin
 
+  /** Oracle = [[UrlCanonCtes]] (for the domain key) + [[LinkRankCtes]]
+    * (for the ranks) + the rollup, tier window and join back. */
   val domainRankSql: String =
     "WITH " + UrlCanonCtes + ",\n" + DomainTierCtes + "\n" +
     s"""SELECT b.doc_id, b.domain, b.rank_q, t.n_pages, t.rank_sum, t.tier

@@ -187,17 +187,6 @@ object Ann {
     org.apache.spark.sql.graft.PortableCosineLshKeys
       .portable_cosine_lsh_keys(vec, planes, 1).getItem(0)
 
-  /** IVF (inverted-file) ANN: vectors are assigned to the nearest of
-    * `nCells` coarse cells; a query searches only the `probes` cells
-    * nearest to it, then exact cosine re-ranks. Cells here are seeded
-    * deterministically from the `nCells` lowest-id vectors (a production
-    * index would run Lloyd iterations — cell geometry affects recall
-    * only, never the correctness of the re-rank).
-    *
-    * Scale shape: assignment is a broadcast of nCells vectors + one map
-    * pass; the search probes `probes/nCells` of the corpus. Cell ids
-    * can be persisted as a partition column so a probe prunes parquet
-    * partitions instead of scanning. */
   /** Collect the dimension-sized seed table (k centroids — tiny by
     * contract) into the reference-object shape the codegen'd
     * [[org.apache.spark.sql.graft.NearestCentroid]] argmax closes over.
@@ -318,6 +307,17 @@ object Ann {
     assignToSeeds(graft.util.Partitioning.spreadIfNarrow(embeddings),
       ivfSeeds(embeddings, nCells, lloydIters, idCol, vecCol), idCol, vecCol)
 
+  /** IVF (inverted-file) ANN: vectors are assigned to the nearest of
+    * `nCells` coarse cells; a query searches only the `probes` cells
+    * nearest to it, then exact cosine re-ranks. Cells here are seeded
+    * deterministically from the `nCells` lowest-id vectors (a production
+    * index would run Lloyd iterations — cell geometry affects recall
+    * only, never the correctness of the re-rank).
+    *
+    * Scale shape: assignment is a broadcast of nCells vectors + one map
+    * pass; the search probes `probes/nCells` of the corpus. Cell ids
+    * can be persisted as a partition column so a probe prunes parquet
+    * partitions instead of scanning. */
   def ivfTopK(embeddings: DataFrame, queryVecId: Long, k: Int,
       nCells: Int = 16, probes: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -458,6 +458,29 @@ object Ann {
         col("rank").cast("long").as("rank"))
   }
 
+  /** [[semDedup]] with `nCells` DERIVED from a target mean cell size —
+    * the sizing contract made explicit. Within-cell pair search is
+    * O(Σ c_i²) ≈ n · targetCellSize for balanced cells, so the cell
+    * count must GROW with the corpus: k ≈ n / targetCellSize. A fixed k
+    * (the gate's 16) silently degenerates toward O(n²/k) as n grows —
+    * at 100 TB each cell would hold n/16 vectors and the within-cell
+    * join is quadratic again. This overload counts the corpus once
+    * (scan-bound, reusable if the caller already knows n) and picks
+    * k = max(1, ⌈n / targetCellSize⌉); targetCellSize trades recall
+    * (bigger cells → fewer split near-dup pairs) against join cost
+    * (pair work per row ∝ targetCellSize). Published SemDeDup practice
+    * sits at a few hundred to a few thousand vectors per cell. */
+  def semDedupByCellSize(embeddings: DataFrame, threshold: Double,
+      targetCellSize: Long, lloydIters: Int = 0,
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      salt: Int = 1): DataFrame = {
+    require(targetCellSize > 0, s"targetCellSize must be positive: $targetCellSize")
+    val n = embeddings.count()
+    val k = math.max(1L, (n + targetCellSize - 1) / targetCellSize)
+    require(k <= Int.MaxValue, s"derived cell count $k overflows Int")
+    semDedup(embeddings, threshold, k.toInt, lloydIters, idCol, vecCol, salt)
+  }
+
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     * deduplication of an embedded corpus — partition the vectors into
     * coarse cells, find near-duplicate pairs WITHIN each cell only,
@@ -492,29 +515,6 @@ object Ann {
     * of clustered embeddings, where one dense region swallows a big
     * cell — spreads its O(c²) pair work across salt·(salt+1)/2 tasks
     * instead of one straggler. Pair set is identical (spec'd). */
-  /** [[semDedup]] with `nCells` DERIVED from a target mean cell size —
-    * the sizing contract made explicit. Within-cell pair search is
-    * O(Σ c_i²) ≈ n · targetCellSize for balanced cells, so the cell
-    * count must GROW with the corpus: k ≈ n / targetCellSize. A fixed k
-    * (the gate's 16) silently degenerates toward O(n²/k) as n grows —
-    * at 100 TB each cell would hold n/16 vectors and the within-cell
-    * join is quadratic again. This overload counts the corpus once
-    * (scan-bound, reusable if the caller already knows n) and picks
-    * k = max(1, ⌈n / targetCellSize⌉); targetCellSize trades recall
-    * (bigger cells → fewer split near-dup pairs) against join cost
-    * (pair work per row ∝ targetCellSize). Published SemDeDup practice
-    * sits at a few hundred to a few thousand vectors per cell. */
-  def semDedupByCellSize(embeddings: DataFrame, threshold: Double,
-      targetCellSize: Long, lloydIters: Int = 0,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      salt: Int = 1): DataFrame = {
-    require(targetCellSize > 0, s"targetCellSize must be positive: $targetCellSize")
-    val n = embeddings.count()
-    val k = math.max(1L, (n + targetCellSize - 1) / targetCellSize)
-    require(k <= Int.MaxValue, s"derived cell count $k overflows Int")
-    semDedup(embeddings, threshold, k.toInt, lloydIters, idCol, vecCol, salt)
-  }
-
   def semDedup(embeddings: DataFrame, threshold: Double,
       nCells: Int = 16, lloydIters: Int = 0,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -811,35 +811,6 @@ object Ann {
     (sub, cents)
   }
 
-  /** The encoded corpus: (id, codes array<long> of length m) — the
-    * m-byte-per-vector index frame a 100 TB ANN keeps hot. One map pass
-    * over a broadcast-literal codebook; `pqIters` > 0 trains it first
-    * ([[pqTrainedCodebook]]). */
-  def pqEncode(corpus: DataFrame, m: Int = 4, ksub: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      pqIters: Int = 0): DataFrame = {
-    val (sub, cents) = pqTrainedCodebook(corpus, m, ksub, pqIters, idCol, vecCol)
-    graft.util.Partitioning.spreadIfNarrow(corpus)
-      .select(col(idCol),
-        array(pqCodeCols(col(vecCol), sub, cents): _*).as("codes"))
-  }
-
-  /** Batched ANN on the PQ scale path: [[batchTopK]]'s query-set shape
-    * scored by ADC over PQ codes instead of exact dots.
-    *
-    *  1. codebook + query set collect driver-side (both dimension-sized
-    *     by contract — queries are the batch contract's broadcast side
-    *     anyway) and meet in a per-query LUT of quantized partials;
-    *  2. ONE map pass encodes each corpus row (m argmins) and sums its
-    *     m LUT partials per query — exact BIGINT adds, no shuffle;
-    *  3. sim = (squant/1e9)/(‖x‖·‖q‖) and the per-query (sim desc, id)
-    *     window rank — the single exchange in the plan, WindowGroupLimit
-    *     pre-pruned to k rows per query per partition.
-    *
-    * Approximation error is the PQ reconstruction error; recall vs
-    * [[batchTopK]] is measured by the `s_ann_recall_pq` gate. Fully
-    * oracled: codebook, codes, LUT partials and the quantized sum are
-    * all deterministic, so DuckDB recomputes identical sims. */
   /** Batched ANN on the COMPOSED production scale path — IVF cell
     * pruning ∘ PQ/ADC scoring, the FAISS IVFADC index shape (flat
     * codes; production adds residual encoding, which changes
@@ -910,8 +881,9 @@ object Ann {
   /** ADC retrieval over prebuilt index rows (`enc`: id, cell, codes,
     * norm): broadcast (query, probed-cell, LUT) side, m exact-BIGINT
     * LUT adds per candidate, one WindowGroupLimit-pruned rank
-    * exchange. */
-  /** `private[graft]` so the committed-artifact gate
+    * exchange.
+    *
+    * `private[graft]` so the committed-artifact gate
     * (s_ann_ivfpq_commit) can retrieve through RE-READ index rows and
     * codebooks — the same consumption path the in-memory composition
     * runs. */
@@ -1071,6 +1043,22 @@ object Ann {
         col("rank").cast("long").as("rank"))
   }
 
+  /** Batched ANN on the PQ scale path: [[batchTopK]]'s query-set shape
+    * scored by ADC over PQ codes instead of exact dots.
+    *
+    *  1. codebook + query set collect driver-side (both dimension-sized
+    *     by contract — queries are the batch contract's broadcast side
+    *     anyway) and meet in a per-query LUT of quantized partials;
+    *  2. ONE map pass encodes each corpus row (m argmins) and sums its
+    *     m LUT partials per query — exact BIGINT adds, no shuffle;
+    *  3. sim = (squant/1e9)/(‖x‖·‖q‖) and the per-query (sim desc, id)
+    *     window rank — the single exchange in the plan, WindowGroupLimit
+    *     pre-pruned to k rows per query per partition.
+    *
+    * Approximation error is the PQ reconstruction error; recall vs
+    * [[batchTopK]] is measured by the `s_ann_recall_pq` gate. Fully
+    * oracled: codebook, codes, LUT partials and the quantized sum are
+    * all deterministic, so DuckDB recomputes identical sims. */
   def batchTopKPq(corpus: DataFrame, queries: DataFrame, k: Int,
       m: Int = 4, ksub: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",

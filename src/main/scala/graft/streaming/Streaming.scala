@@ -32,25 +32,6 @@ case class IncOut(doc_id: Long, fp: String, status: String)
 case class IncTDoc(doc_id: Long, fp: String, ts: java.sql.Timestamp)
 case class IncTState(firstId: Long, lastSeenMs: Long)
 
-/** Typed rows for the streaming incremental NEAR dedup
-  * ([[Streaming.incrementalNearStream]]). Three keyed stages share
-  * these types; the invariant that matters at corpus scale is that NO
-  * persistent state record carries a shingle-hash array more than once
-  * per document:
-  *  - band stage — state keyed by LSH band key, holding ONLY the doc
-  *    ids (plus history/batch side) that hashed into the band. Emits
-  *    CANDIDATE pairs; never sees shingle hashes. ×16 replication of
-  *    an 12-byte id entry, not of the shingle footprint.
-  *  - attach stage — keyed by the PROBING doc; stateless co-group (a
-  *    probe's `reg` row always arrives in the same trigger as every
-  *    candidate it generates), gluing the probe's shingle set onto its
-  *    deduplicated candidates. `state.update` is never called.
-  *  - verify stage — keyed by the PROBED doc; the single compact
-  *    doc → shingle-set store (history as initial state, arrivals via
-  *    their `reg` rows). Exact Jaccard runs here; emits verified hits.
-  * `sh` on [[NearCand]] is transient shuffle payload (what the batch
-  * operator's verify join shuffles per candidate anyway) — it never
-  * lands in the band state. */
 /** Typed rows for the streaming SEMANTIC dedup
   * ([[Streaming.semDedupStream]]): the IVF cell index as streaming
   * state — one state record per COARSE CELL, holding the cell's member
@@ -107,6 +88,25 @@ case class MmKeyState(keeper: Long)
 case class MmVerdict(asset_id: Long, kind: String, fp: String, n_bytes: Long,
   status: String)
 
+/** Typed rows for the streaming incremental NEAR dedup
+  * ([[Streaming.incrementalNearStream]]). Three keyed stages share
+  * these types; the invariant that matters at corpus scale is that NO
+  * persistent state record carries a shingle-hash array more than once
+  * per document:
+  *  - band stage — state keyed by LSH band key, holding ONLY the doc
+  *    ids (plus history/batch side) that hashed into the band. Emits
+  *    CANDIDATE pairs; never sees shingle hashes. ×16 replication of
+  *    an 12-byte id entry, not of the shingle footprint.
+  *  - attach stage — keyed by the PROBING doc; stateless co-group (a
+  *    probe's `reg` row always arrives in the same trigger as every
+  *    candidate it generates), gluing the probe's shingle set onto its
+  *    deduplicated candidates. `state.update` is never called.
+  *  - verify stage — keyed by the PROBED doc; the single compact
+  *    doc → shingle-set store (history as initial state, arrivals via
+  *    their `reg` rows). Exact Jaccard runs here; emits verified hits.
+  * `sh` on [[NearCand]] is transient shuffle payload (what the batch
+  * operator's verify join shuffles per candidate anyway) — it never
+  * lands in the band state. */
 case class NearBandKey(band: Int, bkey: Int)
 case class NearBandRow(band: Int, bkey: Int, doc_id: Long)
 case class NearIdEntry(doc: Long, side: String)
@@ -235,9 +235,6 @@ object Streaming {
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Hourly tumbling-window totals per event type, with a 1-hour
-    * watermark. Run synchronously to a memory sink; returns the final
-    * table (complete mode). */
   /** The hourly tumbling transform alone — shared by the gate replay
     * and InfraSpec's multi-batch incremental replay. */
   private[graft] def hourlyAgg(events: DataFrame): DataFrame =
@@ -251,6 +248,9 @@ object Streaming {
       .select(col("window.start").as("hour"), col("event_type"),
         col("n_events"), col("total_value"))
 
+  /** Hourly tumbling-window totals per event type, with a 1-hour
+    * watermark. Run synchronously to a memory sink; returns the final
+    * table (complete mode). */
   def hourlyWindowed(s: SparkSession, dir: String,
       queryName: String = "graft_stream_hourly"): DataFrame = {
     val agg = hourlyAgg(eventsStream(s, dir))
@@ -297,21 +297,6 @@ object Streaming {
     StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** Streaming exact dedup — the corpus-cleaning pipeline as a stream:
-    * md5-fingerprint groups maintained incrementally (complete mode), so
-    * arriving documents continuously fold into their dup group. The
-    * final table must equal the BATCH `d_exact` answer — same oracle
-    * SQL. (keep_id = MIN over the group is arrival-order independent,
-    * unlike dropDuplicates' keep-first.)
-    *
-    * STATE-SIZE CAVEAT (scale): complete-mode groupBy state is
-    * O(distinct fingerprints) and never expires — correct as a finite
-    * replay GATE (the memory sink is the oracle mechanism), unbounded
-    * on a 100 TB continuous corpus. The production shape is
-    * [[exactDedupStreamWatermarked]]: watermarked
-    * `dropDuplicatesWithinWatermark` keeps only the fingerprints seen
-    * within the watermark horizon, bounding state by arrival rate ×
-    * horizon. */
   /** Streaming KMV distinct-user sketch per event type (complete mode):
     * the sketch buffer IS the streaming state — 64 longs per group no
     * matter how long the stream runs, which is the streaming face of
@@ -716,18 +701,6 @@ object Streaming {
     out.iterator
   }
 
-  /** Streaming incremental exact dedup — [[graft.dedup.Dedup.incrementalExact]]
-    * as CONTINUOUS ingest: the historical fingerprint index is loaded
-    * as flatMapGroupsWithState INITIAL STATE (fp-keyed, constant-size
-    * records — the streaming twin of the batch operator's
-    * fingerprint-only history side), and every arriving document is
-    * classified kept / dup_hist / dup_batch in one pass, appending
-    * immediately. State grows by one O(1) record per NEW fingerprint —
-    * the same growth the batch index itself has, which is the bound a
-    * 100 TB continuous corpus needs (and the RocksDB provider spills it
-    * off-heap; InfraSpec certifies provider equivalence + the row
-    * bound). Same batch composition and oracle as `d_incremental`:
-    * single-batch replay == batch answer bit-for-bit. */
   /** The incremental-dedup streaming TRANSFORM alone — the gate replay
     * wraps it; InfraSpec drives it directly to observe state-store row
     * counts, provider equivalence, and a multi-batch id-ordered split.
@@ -886,6 +859,18 @@ object Streaming {
     s.table(queryName).orderBy(col("doc_id"))
   }
 
+  /** Streaming incremental exact dedup — [[graft.dedup.Dedup.incrementalExact]]
+    * as CONTINUOUS ingest: the historical fingerprint index is loaded
+    * as flatMapGroupsWithState INITIAL STATE (fp-keyed, constant-size
+    * records — the streaming twin of the batch operator's
+    * fingerprint-only history side), and every arriving document is
+    * classified kept / dup_hist / dup_batch in one pass, appending
+    * immediately. State grows by one O(1) record per NEW fingerprint —
+    * the same growth the batch index itself has, which is the bound a
+    * 100 TB continuous corpus needs (and the RocksDB provider spills it
+    * off-heap; InfraSpec certifies provider equivalence + the row
+    * bound). Same batch composition and oracle as `d_incremental`:
+    * single-batch replay == batch answer bit-for-bit. */
   def incrementalDedupStream(s: SparkSession, dir: String,
       queryName: String = "graft_stream_incr"): DataFrame = {
     val out = incrementalDedupTransform(s, dir, histDir = dir)
@@ -1956,6 +1941,21 @@ object Streaming {
     s.table(queryName).orderBy(col("doc_id"))
   }
 
+  /** Streaming exact dedup — the corpus-cleaning pipeline as a stream:
+    * md5-fingerprint groups maintained incrementally (complete mode), so
+    * arriving documents continuously fold into their dup group. The
+    * final table must equal the BATCH `d_exact` answer — same oracle
+    * SQL. (keep_id = MIN over the group is arrival-order independent,
+    * unlike dropDuplicates' keep-first.)
+    *
+    * STATE-SIZE CAVEAT (scale): complete-mode groupBy state is
+    * O(distinct fingerprints) and never expires — correct as a finite
+    * replay GATE (the memory sink is the oracle mechanism), unbounded
+    * on a 100 TB continuous corpus. The production shape is
+    * [[exactDedupStreamWatermarked]]: watermarked
+    * `dropDuplicatesWithinWatermark` keeps only the fingerprints seen
+    * within the watermark horizon, bounding state by arrival rate ×
+    * horizon. */
   def exactDedupStream(s: SparkSession, dir: String,
       queryName: String = "graft_stream_dedup"): DataFrame = {
     val agg = s.readStream

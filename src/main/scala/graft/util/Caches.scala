@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.DataFrame
 
 /** Registry of intermediates persisted INSIDE graft operators (LSH
-  * candidate sets, funnel stage frames, CC label/edge rounds). The
+  * candidate sets, funnel stage frames, CC's final labels). The
   * operators persist because their intermediate is referenced several
   * times in the returned plan — but the persist call is invisible to
   * the caller, so without this registry a long-lived session that
@@ -19,10 +19,11 @@ import org.apache.spark.sql.DataFrame
   * exactly the operator-internal entries, nothing else. Call it AFTER
   * materializing the operator's result (count/collect/write).
   * Persist-backed entries stay valid afterwards (they re-execute from
-  * lineage if reused) — but entries registered by
-  * [[Lineage.severTracked]] are DESTRUCTIVE: a severed
-  * (locally-checkpointed) frame has no lineage to recompute from, so
-  * reusing it after releaseAll fails with checkpoint-block-not-found.
+  * lineage if reused) — but severed entries ([[Lineage.severTracked]],
+  * the labels [[graft.dedup.Dedup.connectedComponents]] returns) are
+  * DESTRUCTIVE: a locally-checkpointed frame has no lineage to
+  * recompute from, so reusing it after releaseAll fails with
+  * checkpoint-block-not-found.
   * The contract is therefore: between releaseAll and the next query,
   * no frame returned by an operator may be re-executed. Thread-safe;
   * calling releaseAll twice is harmless (the queue drains).
@@ -36,8 +37,8 @@ object IntermediateCaches {
     df
   }
 
-  /** Register an arbitrary release action (e.g. an RDD-level persist
-    * backing a lineage-cut frame, which `Dataset.unpersist` and
+  /** Register an arbitrary release action (e.g. the hook of a severed
+    * frame, whose RDD-level persist `Dataset.unpersist` and
     * `catalog.clearCache` cannot reach). */
   private[graft] def trackRelease(release: Boolean => Unit): Unit =
     tracked.add(release)

@@ -2,63 +2,49 @@ package graft.util
 
 import org.apache.spark.sql.DataFrame
 
-/** Logical-plan lineage truncation for ITERATIVE DataFrame algorithms
-  * (connected components, k-means chains): a loop that builds round
-  * r's frame on top of round r-1's grows the Catalyst plan every round,
-  * and analysis/cache-lookup cost over the carried tree compounds —
-  * `Dataset.persist` alone does NOT cut the logical plan, it only
-  * short-circuits execution. Measured in a per-round DataFrame BPE
-  * learner: per-round wall time doubled every round past ~14 and OOM'd
-  * an 8 GB driver at round 19, with the DATA (a ~10k-word vocabulary)
-  * unchanged throughout.
+/** Lineage truncation for iterative DataFrame loops and for small,
+  * expensively derived frames that feed many downstream stages.
   *
-  * [[cut]] re-roots the frame as a LogicalRDD over the persisted
-  * row RDD: execution stays incremental (reads the cache), the plan
-  * stays O(1) deep, and the returned release hook unpersists the RDD
-  * (row-level recompute after release walks the RDD lineage chain —
-  * linear, RDD-side — so released results remain usable, just slower).
+  * A loop that builds round r's frame on top of round r-1's grows the
+  * Catalyst plan every round, and analysis/cache-lookup cost over the
+  * carried tree compounds — `Dataset.persist` alone does NOT cut the
+  * logical plan, it only short-circuits execution (measured in a
+  * per-round DataFrame BPE learner: per-round wall time doubled every
+  * round past ~14 and OOM'd an 8 GB driver at round 19). A re-rooted
+  * plan is not enough either: an RDD chain that still grows one level
+  * per round makes the task binaries deeper every round, and a
+  * min-label loop re-rooted that way died with a StackOverflowError in
+  * task deserialization past ~55 rounds. [[sever]] drops both.
   */
 object Lineage {
-  private val CacheLvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-
-  /** Returns the lineage-cut frame and its release hook (argument =
-    * blocking). Callers iterate: cut round r, release round r-1 once
-    * r is materialized. */
-  def cut(df: DataFrame): (DataFrame, Boolean => Unit) = {
-    val rdd = df.rdd
-    rdd.persist(CacheLvl)
-    val c = df.sparkSession.createDataFrame(rdd, df.schema)
-    (c, blocking => { rdd.unpersist(blocking); () })
-  }
-
-  /** HARD lineage sever via eager `localCheckpoint`: materializes `df`
-    * and re-roots it over the checkpointed internal-row RDD, dropping
-    * BOTH the Catalyst plan AND the RDD recompute chain. Use where a
-    * small-but-expensively-derived frame (a fingerprint trunk, an
-    * evidence edge set) feeds MANY downstream stages: after [[cut]] the
-    * persisted RDD still carries its full upstream closure chain, so
-    * every downstream task binary serializes/deserializes the whole
-    * expression tree — measured on mm_dup_union as ~30 GB of
-    * ObjectInputStream/TreeNode allocation for one gate, the G1
-    * humongous/expansion churn no JVM flag the repo does not own can be
-    * trusted to absorb. After sever the task binary carries only a
-    * checkpoint block reference.
+  /** Lineage sever via `localCheckpoint`: re-roots `df` as a LogicalRDD
+    * over a checkpointed internal-row RDD, dropping BOTH the Catalyst
+    * plan AND the RDD recompute chain — a downstream task binary
+    * carries only a checkpoint block reference, not the upstream
+    * expression tree (measured on mm_dup_union as ~30 GB of
+    * ObjectInputStream/TreeNode allocation for one gate before its
+    * evidence edges were severed).
     *
-    * Tradeoffs vs [[cut]]: the frame is computed once eagerly (no lazy
-    * composition), and RELEASE IS DESTRUCTIVE — a locally-checkpointed
-    * RDD has no lineage to recompute from, so the returned frame must
-    * not be used after its release hook runs (release after the final
-    * materialization; [[graft.util.IntermediateCaches.releaseAll]]'s
-    * between-queries contract already guarantees this). On a real
-    * cluster localCheckpoint data is lost with an executor — for
-    * multi-hour 100 TB jobs set [[reliableMode]] (reliable
-    * `checkpoint` to durable storage — blocks survive executor loss);
-    * locally (and for dimension-sized trunks recomputable by
-    * re-running the query) the non-replicated block is the right cost. */
-  def sever(df: DataFrame): (DataFrame, Boolean => Unit) = {
-    if (reliableMode(df.sparkSession)) severReliable(df)
+    * `eager = true` materializes the frame now (one job). `eager =
+    * false` marks it: the first job that reads every row of the
+    * returned frame fills the blocks and truncates the RDD chain, so a
+    * loop whose per-round convergence aggregate is that job pays no
+    * extra job per round.
+    *
+    * RELEASE IS DESTRUCTIVE: a locally-checkpointed RDD has no lineage
+    * to recompute from, so the returned frame must not be used after
+    * its release hook (argument = blocking) runs. Release after the
+    * final materialization — loops release round r-1 once round r is
+    * materialized, and [[graft.util.IntermediateCaches.releaseAll]]'s
+    * between-queries contract covers tracked frames. On a real cluster
+    * localCheckpoint data is lost with an executor — for multi-hour
+    * 100 TB jobs set [[ReliableKey]] (reliable `checkpoint` to durable
+    * storage — blocks survive executor loss); locally the
+    * non-replicated block is the right cost. */
+  def sever(df: DataFrame, eager: Boolean = true): (DataFrame, Boolean => Unit) = {
+    if (reliableMode(df.sparkSession)) severReliable(df, eager)
     else {
-      val cp = df.localCheckpoint(true)
+      val cp = df.localCheckpoint(eager)
       (cp, unpersistHookOf(cp))
     }
   }
@@ -96,11 +82,11 @@ object Lineage {
     * themselves outlive the hook and are removed with the checkpoint
     * dir). Exposed for callers that want durability for one specific
     * trunk without flipping the session-wide key. */
-  def severReliable(df: DataFrame): (DataFrame, Boolean => Unit) = {
+  def severReliable(df: DataFrame, eager: Boolean = true): (DataFrame, Boolean => Unit) = {
     require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
       s"$ReliableKey=true requires SparkContext.setCheckpointDir " +
         "(durable storage reachable by every executor)")
-    val cp = df.checkpoint(true)
+    val cp = df.checkpoint(eager)
     (cp, unpersistHookOf(cp))
   }
 

@@ -1,5 +1,8 @@
 package graft
 
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -11,43 +14,6 @@ import graft.util.Skew
 class ScaleSpec extends AnyFunSuite {
   import SharedSpark._
   import spark.implicits._
-
-  test("Lineage.cut: same rows, constant-depth plan, usable after release") {
-    // the iterative-loop guard (CC rounds, BPE merge learning): the cut
-    // frame must carry identical data behind a LEAF logical plan — no
-    // trace of the original lineage — and must still evaluate after its
-    // cache is released (row-level recompute walks the RDD chain)
-    val base = (1L to 100L).toDF("id")
-      .select(col("id"), (col("id") * 2).as("v"))
-      .filter(col("id") % 3 =!= 0)
-    // other suites share this session and may hold their own tracked
-    // caches; assert release only over the RDDs THIS test creates
-    val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-    val (cut, release) = graft.util.Lineage.cut(base)
-    try {
-      assert(cut.schema == base.schema)
-      assert(cut.collect().toSeq.sortBy(_.getLong(0)) ==
-        base.collect().toSeq.sortBy(_.getLong(0)))
-      // leaf plan: one node, no Filter/Project lineage carried
-      val logical = cut.queryExecution.logical
-      assert(logical.children.isEmpty, s"cut plan is not a leaf:\n$logical")
-      // 30 stacked rounds stay flat: each cut's plan is again a leaf
-      var f = cut
-      var releases = List(release)
-      for (_ <- 1 to 30) {
-        val (nf, r) = graft.util.Lineage.cut(f.select(col("id"), (col("v") + 1).as("v")))
-        f = nf; releases ::= r
-      }
-      assert(f.queryExecution.logical.children.isEmpty)
-      assert(f.agg(sum(col("v"))).collect().head.getLong(0) ==
-        base.agg(sum(col("v") + 30)).collect().head.getLong(0))
-      releases.foreach(_(true))
-      // released but still usable
-      assert(f.count() == base.count())
-      val leftover = spark.sparkContext.getPersistentRDDs.keySet -- preexisting
-      assert(leftover.isEmpty, s"cut RDDs survive release: $leftover")
-    } finally release(true)
-  }
 
   test("Lineage.sever: local and reliable modes agree; reliable survives release") {
     import graft.util.Lineage
@@ -61,6 +27,30 @@ class ScaleSpec extends AnyFunSuite {
     assert(loc.queryExecution.logical.children.isEmpty)
     assert(loc.collect().toSeq.sortBy(_.getLong(0)) == expect)
     releaseLoc(true)
+
+    // lazy mode, the iterative-loop form (CC rounds): the same rows
+    // behind a leaf plan, 30 stacked rounds stay flat, and releasing
+    // every round leaves no persisted RDD behind. Other suites share
+    // this session and may hold their own tracked caches, so release
+    // is asserted only over the RDDs this block creates.
+    val preexisting = spark.sparkContext.getPersistentRDDs.keySet
+    val (lazy0, releaseLazy0) = Lineage.sever(base, eager = false)
+    assert(lazy0.schema == base.schema)
+    assert(lazy0.queryExecution.logical.children.isEmpty,
+      s"lazy sever plan is not a leaf:\n${lazy0.queryExecution.logical}")
+    assert(lazy0.collect().toSeq.sortBy(_.getLong(0)) == expect)
+    var f = lazy0
+    var releases = List(releaseLazy0)
+    for (_ <- 1 to 30) {
+      val (nf, r) = Lineage.sever(f.select(col("id"), (col("v") + 1).as("v")), eager = false)
+      f = nf; releases ::= r
+    }
+    assert(f.queryExecution.logical.children.isEmpty)
+    assert(f.agg(sum(col("v"))).collect().head.getLong(0) ==
+      base.agg(sum(col("v") + 30)).collect().head.getLong(0))
+    releases.foreach(_(true))
+    val leftover = spark.sparkContext.getPersistentRDDs.keySet -- preexisting
+    assert(leftover.isEmpty, s"lazily severed RDDs survive release: $leftover")
 
     spark.conf.set(Lineage.ReliableKey, "true")
     try {
@@ -132,49 +122,119 @@ class ScaleSpec extends AnyFunSuite {
     assert(unsalted.nonEmpty && salted == unsalted)
   }
 
-  test("star contraction == min-label on mixed chains/cliques/pairs") {
-    val pairs = Seq(
-      (1L, 2L), (2L, 3L),                            // path of 3
-      (10L, 11L),                                    // pair
-      (20L, 21L), (21L, 22L), (20L, 22L),            // triangle
-      (30L, 31L), (31L, 32L), (32L, 33L), (33L, 34L) // chain (diameter 4)
-    ).toDF("doc_a", "doc_b")
-    val minlabel = Dedup.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = Dedup.connectedComponents(pairs, algorithm = "star")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star == minlabel)
-    graft.util.IntermediateCaches.releaseAll(blocking = true)
+  /** Driver-side union-find whose roots are component minima: the
+    * reference [[Dedup.connectedComponents]] is checked against. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.map(k => k -> find(k)).toMap
   }
 
-  test("star contraction == min-label on the gate corpus near-dup graph") {
+  private def components(edges: Seq[(Long, Long)], maxIters: Int = 20): Map[Long, Long] =
+    try Dedup.connectedComponents(edges.toDF("doc_a", "doc_b"), maxIters = maxIters)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally graft.util.IntermediateCaches.releaseAll(blocking = true)
+
+  /** Jobs the min-label loop launched on [[mixedFixture]] when its
+    * rounds went through the plan-only `Lineage.cut` (measured). */
+  private val CcFixtureJobs = 24
+
+  private val mixedFixture = Seq(
+    (1L, 2L), (2L, 3L),                            // path of 3
+    (10L, 11L),                                    // pair
+    (20L, 21L), (21L, 22L), (20L, 22L),            // triangle
+    (30L, 31L), (31L, 32L), (32L, 33L), (33L, 34L) // chain (diameter 4)
+  )
+
+  /** Generated pair graphs: disjoint cliques, stars, chains shorter
+    * than the default round budget and single edges over ids that
+    * include the ends of the Long range (their label sums overflow a
+    * Long, so only the decimal convergence sum can tell rounds apart),
+    * with duplicated and reversed edges; one graph in ten is empty. */
+  private val genGraph: Gen[Seq[(Long, Long)]] = {
+    val pool = (0L until 40L) ++ (0L until 10L).map(Long.MinValue + _) ++
+      (0L until 10L).map(Long.MaxValue - _)
+    val genShape: Gen[(String, Int)] = Gen.oneOf(
+      Gen.choose(2, 5).map("clique" -> _), Gen.choose(3, 7).map("star" -> _),
+      Gen.choose(2, 12).map("chain" -> _), Gen.const("edge" -> 2))
+    def edgesOf(shape: String, ids: Seq[Long]): Seq[(Long, Long)] = shape match {
+      case "clique" => ids.combinations(2).map(p => (p(0), p(1))).toSeq
+      case "star" => ids.tail.map(ids.head -> _)
+      case _ => ids.zip(ids.tail)
+    }
+    val nonEmpty = for {
+      shapes <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, genShape))
+      seed <- Gen.long
+      extra <- Gen.listOfN(shapes.map(_._2).sum * 2, Gen.choose(0, 3))
+    } yield {
+      val ids = new scala.util.Random(seed).shuffle(pool)
+      val starts = shapes.map(_._2).scanLeft(0)(_ + _)
+      val edges = shapes.zip(starts).flatMap { case ((shape, n), at) =>
+        edgesOf(shape, ids.slice(at, at + n)) }
+      // 0 = as is, 1 = reversed, 2 = duplicated, 3 = both directions
+      edges.zip(extra).flatMap { case ((a, b), x) =>
+        x match { case 0 => Seq((a, b)); case 1 => Seq((b, a))
+          case 2 => Seq((a, b), (a, b)); case _ => Seq((a, b), (b, a)) } }
+    }
+    Gen.frequency(1 -> Gen.const(Seq.empty[(Long, Long)]), 9 -> nonEmpty)
+  }
+
+  test("connectedComponents == driver union-find on fixtures and generated graphs") {
+    assert(components(mixedFixture) == unionFind(mixedFixture))
     val docs = Tables.documents(spark, sf0001)
-    val pairs = Dedup.minhashLshPairs(docs, n = 3, threshold = 0.5)
-    val minlabel = Dedup.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val star = Dedup.connectedComponents(pairs, algorithm = "star")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(minlabel.nonEmpty && star == minlabel)
+    val gate = Dedup.minhashLshPairs(docs, n = 3, threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     graft.util.IntermediateCaches.releaseAll(blocking = true)
+    assert(gate.nonEmpty && components(gate) == unionFind(gate))
+    val prop = Prop.forAllNoShrink(genGraph) { edges =>
+      val (got, want) = (components(edges), unionFind(edges))
+      (got == want) :| s"edges=$edges\n cc: $got\n uf: $want"
+    }
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(20).withInitialSeed(Seed(20261019L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
-  test("star contraction collapses a diameter-999 chain within 20 rounds; min-label throws loudly past its round budget") {
+  test("connectedComponents throws past its round budget") {
     // 1000 nodes in a single path, ids permuted so labels can't ride the
-    // edge direction: min-label needs ~999 rounds (one hop per round),
-    // star contraction O(log² n). 919 is coprime with 1000 ⇒ permutation.
+    // edge direction: min-label needs ~999 rounds (one hop per round).
+    // 919 is coprime with 1000 ⇒ permutation. The silent-partial-
+    // clustering guard: past the budget it must THROW, never return
+    // unconverged labels.
     val perm = (0 until 1000).map(i => (i * 919) % 1000)
     val chain = (0 until 999).map(i => (perm(i).toLong, perm(i + 1).toLong))
       .toDF("doc_a", "doc_b")
-    val star = Dedup.connectedComponents(chain, maxIters = 20, algorithm = "star")
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(star.length == 1000 && star.forall(_._2 == 0L))
-    // the silent-partial-clustering guard: min-label must THROW when the
-    // diameter exceeds the round budget, never return unconverged labels
     val e = intercept[IllegalStateException] {
       Dedup.connectedComponents(chain, maxIters = 10)
     }
-    assert(e.getMessage.contains("did not converge"))
+    assert(e.getMessage.contains("did not converge") && e.getMessage.contains("maxIters"))
     graft.util.IntermediateCaches.releaseAll(blocking = true)
+  }
+
+  test("connectedComponents converges on a permuted 100-node chain with maxIters raised") {
+    // node 0 sits at one end (perm(0) = 0), so its label needs 99 hops
+    // and the loop runs 100 rounds: each round must leave neither a
+    // deeper plan nor a deeper RDD chain behind
+    val perm = (0 until 100).map(i => (i * 37) % 100)
+    val chain = (0 until 99).map(i => (perm(i).toLong, perm(i + 1).toLong))
+    val cc = components(chain, maxIters = 120)
+    assert(cc.size == 100 && cc.values.forall(_ == 0L))
+  }
+
+  test("connectedComponents job count on the mixed chain/clique fixture") {
+    // an eager sever (or any other extra per-round pass) shows up
+    // here as extra jobs
+    val pairs = mixedFixture.toDF("doc_a", "doc_b")
+    val jobs = jobsOf { Dedup.connectedComponents(pairs) }
+    graft.util.IntermediateCaches.releaseAll(blocking = true)
+    assert(jobs <= CcFixtureJobs, s"connectedComponents launched $jobs jobs")
   }
 
   test("triangle partitioning spreads a hot bucket's pair work across cells") {

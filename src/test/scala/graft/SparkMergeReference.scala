@@ -7,7 +7,7 @@ import graft.text.{Bpe, WordPiece}
 
 /** The per-round Spark merge learners that [[Bpe.learnMerges]] and
   * [[WordPiece.learnMerges]] replaced: every round is a pair-count
-  * aggregation plus a 1-row argmax collect over a lineage-cut
+  * aggregation plus a 1-row argmax collect over a lazily severed
   * vocabulary frame, and the merge is the interpreted
   * [[Bpe.applyMerge]] fold. Kept as the reference the driver learners
   * are checked against (MergeLearnerParitySpec). */
@@ -17,14 +17,13 @@ object SparkMergeReference {
       wordCol: String = "word", freqCol: String = "freq",
       symsOf: Column => Column = Bpe.charSyms): Seq[(String, String, Long)] = {
     require(k >= 1, s"k must be >= 1: $k")
-    var (vocab, release) = graft.util.Lineage.cut(
+    var (vocab, release) = graft.util.Lineage.sever(
       wordFreq.select(symsOf(col(wordCol)).as("syms"),
-        col(freqCol).cast("long").as("freq")))
+        col(freqCol).cast("long").as("freq")), eager = false)
     // round r-1's release is deferred until round r's argmax has
-    // materialized round r's cut RDD (the argmax IS the materializing
-    // job — one Spark job per round, no extra count pass; releasing
-    // r-1 earlier would force r's first evaluation to recompute the
-    // whole chain from the source)
+    // materialized round r's severed frame (the argmax IS the
+    // materializing job — no extra count pass per round; round r reads
+    // round r-1's blocks, and release is destructive)
     var prevRelease: Option[Boolean => Unit] = None
     val merges = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
     try {
@@ -47,8 +46,9 @@ object SparkMergeReference {
         else {
           val (l, r, pf) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
           merges += ((l, r, pf))
-          val (next, releaseNext) = graft.util.Lineage.cut(
-            vocab.select(Bpe.applyMerge(col("syms"), l, r).as("syms"), col("freq")))
+          val (next, releaseNext) = graft.util.Lineage.sever(
+            vocab.select(Bpe.applyMerge(col("syms"), l, r).as("syms"), col("freq")),
+            eager = false)
           vocab = next
           release = releaseNext
           round += 1
@@ -68,11 +68,11 @@ object SparkMergeReference {
       wordCol: String = "word",
       freqCol: String = "freq"): Seq[(String, String, Long, Long)] = {
     require(k >= 1, s"k must be >= 1: $k")
-    var (vocab, release) = graft.util.Lineage.cut(
+    var (vocab, release) = graft.util.Lineage.sever(
       wordFreq.select(Bpe.charSyms(col(wordCol)).as("syms"),
-        col(freqCol).cast("long").as("freq")))
+        col(freqCol).cast("long").as("freq")), eager = false)
     // round r-1 releases only after round r's argmax materialized
-    // round r's cut RDD (the Bpe.learnMerges discipline)
+    // round r's severed frame (the Bpe.learnMerges discipline)
     var prevRelease: Option[Boolean => Unit] = None
     val merges = scala.collection.mutable.ArrayBuffer[(String, String, Long, Long)]()
     try {
@@ -108,8 +108,9 @@ object SparkMergeReference {
         else {
           val (l, r) = (best(0).getString(0), best(0).getString(1))
           merges += ((l, r, best(0).getLong(2), best(0).getLong(3)))
-          val (next, releaseNext) = graft.util.Lineage.cut(
-            vocab.select(Bpe.applyMerge(col("syms"), l, r).as("syms"), col("freq")))
+          val (next, releaseNext) = graft.util.Lineage.sever(
+            vocab.select(Bpe.applyMerge(col("syms"), l, r).as("syms"), col("freq")),
+            eager = false)
           vocab = next
           release = releaseNext
           round += 1
