@@ -28,30 +28,6 @@ class ScaleSpec extends AnyFunSuite {
     assert(loc.collect().toSeq.sortBy(_.getLong(0)) == expect)
     releaseLoc(true)
 
-    // lazy mode, the iterative-loop form (CC rounds): the same rows
-    // behind a leaf plan, 30 stacked rounds stay flat, and releasing
-    // every round leaves no persisted RDD behind. Other suites share
-    // this session and may hold their own tracked caches, so release
-    // is asserted only over the RDDs this block creates.
-    val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-    val (lazy0, releaseLazy0) = Lineage.sever(base, eager = false)
-    assert(lazy0.schema == base.schema)
-    assert(lazy0.queryExecution.logical.children.isEmpty,
-      s"lazy sever plan is not a leaf:\n${lazy0.queryExecution.logical}")
-    assert(lazy0.collect().toSeq.sortBy(_.getLong(0)) == expect)
-    var f = lazy0
-    var releases = List(releaseLazy0)
-    for (_ <- 1 to 30) {
-      val (nf, r) = Lineage.sever(f.select(col("id"), (col("v") + 1).as("v")), eager = false)
-      f = nf; releases ::= r
-    }
-    assert(f.queryExecution.logical.children.isEmpty)
-    assert(f.agg(sum(col("v"))).collect().head.getLong(0) ==
-      base.agg(sum(col("v") + 30)).collect().head.getLong(0))
-    releases.foreach(_(true))
-    val leftover = spark.sparkContext.getPersistentRDDs.keySet -- preexisting
-    assert(leftover.isEmpty, s"lazily severed RDDs survive release: $leftover")
-
     spark.conf.set(Lineage.ReliableKey, "true")
     try {
       // the flag without a checkpoint dir must fail FAST at sever time
@@ -93,6 +69,37 @@ class ScaleSpec extends AnyFunSuite {
       assert(df.collect().toSeq.sortBy(_.getLong(0)) == expect)
       rel(true)
     } finally spark.conf.unset(Lineage.ReliableKey)
+  }
+
+  test("Lineage.sever lazy mode: same rows, constant-depth plan, nothing left after release") {
+    import graft.util.Lineage
+    val base = (1L to 100L).toDF("id")
+      .select(col("id"), (col("id") * 7 % 13).as("v"))
+      .filter(col("id") % 4 =!= 0)
+    val expect = base.collect().toSeq.sortBy(_.getLong(0))
+    // the iterative-loop form (CC rounds): the same rows behind a leaf
+    // plan, 30 stacked rounds stay flat, and releasing every round
+    // leaves no persisted RDD behind. Other suites share this session
+    // and may hold their own tracked caches, so release is asserted
+    // only over the RDDs this test creates.
+    val preexisting = spark.sparkContext.getPersistentRDDs.keySet
+    val (lazy0, releaseLazy0) = Lineage.sever(base, eager = false)
+    assert(lazy0.schema == base.schema)
+    assert(lazy0.queryExecution.logical.children.isEmpty,
+      s"lazy sever plan is not a leaf:\n${lazy0.queryExecution.logical}")
+    assert(lazy0.collect().toSeq.sortBy(_.getLong(0)) == expect)
+    var f = lazy0
+    var releases = List(releaseLazy0)
+    for (_ <- 1 to 30) {
+      val (nf, r) = Lineage.sever(f.select(col("id"), (col("v") + 1).as("v")), eager = false)
+      f = nf; releases ::= r
+    }
+    assert(f.queryExecution.logical.children.isEmpty)
+    assert(f.agg(sum(col("v"))).collect().head.getLong(0) ==
+      base.agg(sum(col("v") + 30)).collect().head.getLong(0))
+    releases.foreach(_(true))
+    val leftover = spark.sparkContext.getPersistentRDDs.keySet -- preexisting
+    assert(leftover.isEmpty, s"lazily severed RDDs survive release: $leftover")
   }
 
   test("saltedSelfJoinPairs == plain self-join pairs, every salt") {
@@ -186,13 +193,19 @@ class ScaleSpec extends AnyFunSuite {
     Gen.frequency(1 -> Gen.const(Seq.empty[(Long, Long)]), 9 -> nonEmpty)
   }
 
-  test("connectedComponents == driver union-find on fixtures and generated graphs") {
+  test("connectedComponents == driver union-find on mixed chains/cliques/pairs") {
     assert(components(mixedFixture) == unionFind(mixedFixture))
+  }
+
+  test("connectedComponents == driver union-find on the gate corpus near-dup graph") {
     val docs = Tables.documents(spark, sf0001)
     val gate = Dedup.minhashLshPairs(docs, n = 3, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     graft.util.IntermediateCaches.releaseAll(blocking = true)
     assert(gate.nonEmpty && components(gate) == unionFind(gate))
+  }
+
+  test("connectedComponents == driver union-find on generated graphs") {
     val prop = Prop.forAllNoShrink(genGraph) { edges =>
       val (got, want) = (components(edges), unionFind(edges))
       (got == want) :| s"edges=$edges\n cc: $got\n uf: $want"
