@@ -631,42 +631,29 @@ object Dedup {
         lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)")))
       .head().getDecimal(0)
 
-  /** SimHash near-dup pairs: one 64-bit fingerprint per doc, bucketed
-    * with a Manku-style multi-table banding (Detecting Near-Duplicates
-    * for Web Crawling, WWW'07), then verified with
-    * bit_count(xor) ≤ maxHamming.
+  /** SimHash near-dup pairs on the engine-portable 60-bit md5-vote
+    * signature ([[org.apache.spark.sql.graft.PortableSimHash60]]),
+    * bucketed with a Manku-style multi-table banding (Manku, Jain and
+    * Das Sarma, "Detecting Near-Duplicates for Web Crawling", WWW'07),
+    * then verified with bit_count(xor) ≤ maxHamming. Every stage —
+    * token hash, ±1 votes, sign bits, Hamming — replays in DuckDB, so a
+    * brute-force Hamming join is a valid oracle for the banded plan.
     *
-    * Pigeonhole recall guarantee: split the 64 bits into b blocks; a pair
-    * within Hamming distance h differs in ≤ h blocks, so any m ≤ b − h
-    * blocks are untouched in at least one of the C(b,m) m-block
-    * combinations — each combination is one table whose key concatenates
-    * its blocks. Key width drives bucket count (the scale lever):
-    *  - h ≤ 3 → 4 tables × 16-bit single blocks (2^16 buckets/table)
-    *  - h ≤ 6 → C(8,2)=28 tables × paired 8-bit blocks (16-bit keys)
-    *  - h = 7 → 8 tables × 8-bit blocks (the pigeonhole maximum; bucket
-    *    join is ~(N/256)² per table — verification scale only)
-    * vs the old flat 8×8-bit scheme (256 buckets/table ⇒ ~N²/8192
-    * candidate pairs at corpus scale), the 16-bit keys cut expected
-    * candidates by (2^16/2^8)² / (28/8) ≈ 18 700×. */
-  def simhashPairs(docs: DataFrame, maxHamming: Int,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    hammingPairs(spread(docs).select(col(idCol).as("doc"),
-      simhash64(norm_text(col(textCol))).as("sh")), maxHamming)
-
-  /** [[simhashPairs]] on the engine-portable 60-bit md5-vote signature
-    * ([[org.apache.spark.sql.graft.PortableSimHash60]]): same
-    * detector geometry (paired-block Manku tables, bit_count verify,
-    * recall 1 within the radius by pigeonhole — 10 six-bit blocks, a
-    * pair within Hamming 8 leaves ≥ 2 blocks untouched, so ≥ 1 of the
-    * C(10,2) = 45 paired keys matches), but every stage — token hash,
-    * ±1 votes, sign bits, block keys, Hamming — replays in DuckDB,
-    * which is what lets the d_simhash gate be hash-verified instead of
-    * rows-only. */
+    * Pigeonhole recall guarantee: the 60 bits split into ten 6-bit
+    * blocks; a pair within Hamming distance h differs in ≤ h blocks, so
+    * at least 10 − h blocks are untouched and any m ≤ 10 − h of them
+    * form a key the pair shares — one table per m-block combination.
+    * Key width drives bucket count (the scale lever), so m is the
+    * widest the radius allows, capped at 3:
+    *  - h ≤ 7 → C(10,3) = 120 tables × 18-bit keys;
+    *  - h = 8 → C(10,2) = 45 tables × 12-bit keys.
+    * Four-block keys (210 × 24 bits) shrink candidates further but pay
+    * for the extra tables on small corpora. */
   def simhashPairsPortable(docs: DataFrame, maxHamming: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 8,
       "maxHamming must be in [0,8] for the 10-block 60-bit geometry")
-    // severed: the 45-key self-join reads fps on both sides — without
+    // severed: the banded self-join reads fps on both sides — without
     // the cut each band task binary carries the simhash expression
     // tree twice and the signatures compute twice (Lineage.sever)
     val fps = graft.util.Lineage.severTracked(
@@ -675,8 +662,9 @@ object Dedup {
           .portable_simhash60(norm_text(col(textCol))).as("sh")))
     def block(i: Int): Column =
       shiftright(col("sh"), i * 6).bitwiseAND(lit(63L))
-    bandedHammingJoin(fps, (0 until 10).combinations(2).toSeq.map(ij =>
-      shiftleft(block(ij(0)), 6) + block(ij(1))), maxHamming)
+    val m = math.min(3, 10 - maxHamming)
+    bandedHammingJoin(fps, (0 until 10).combinations(m).toSeq.map(bs =>
+      bs.map(block).reduce((key, b) => shiftleft(key, 6) + b)), maxHamming)
   }
 
   /** The Manku self-join every Hamming detector shares: each (doc, sh)
@@ -699,7 +687,13 @@ object Dedup {
   }
 
   /** The Manku table keys for a 64-bit fingerprint at radius
-    * `maxHamming` (the geometry in [[simhashPairs]]). */
+    * `maxHamming`, by the same pigeonhole argument as
+    * [[simhashPairsPortable]] (any m ≤ b − h of b blocks stay untouched
+    * for a pair within distance h):
+    *  - h ≤ 3 → 4 tables × 16-bit single blocks;
+    *  - h ≤ 6 → C(8,2) = 28 tables × paired 8-bit blocks (16-bit keys);
+    *  - h = 7 → 8 tables × 8-bit blocks (the pigeonhole maximum; bucket
+    *    join is ~(N/256)² per table — verification scale only). */
   private def mankuKeys(maxHamming: Int): Seq[Column] = {
     require(maxHamming >= 0 && maxHamming <= 7,
       "maxHamming must be in [0,7] (wider radii need >64-bit fingerprints)")
@@ -713,9 +707,9 @@ object Dedup {
   }
 
   /** The Manku banding + Hamming verify over PRECOMPUTED 64-bit
-    * fingerprints (`fps`: (doc, sh)) — extracted from [[simhashPairs]]
-    * so any 64-bit perceptual fingerprint (SimHash, image dHash/aHash)
-    * shares the same exact-recall detector. Output:
+    * fingerprints (`fps`: (doc, sh)), so any 64-bit perceptual
+    * fingerprint (image dHash/aHash, audio) shares the same exact-recall
+    * detector. Output:
     * (doc_a, doc_b, hamming) for every pair within `maxHamming` —
     * EXACT by the pigeonhole guarantee (recall 1 at the banding stage,
     * precision restored by the bit_count verify), so a brute-force

@@ -1956,7 +1956,7 @@ object LlmOps {
     * θ→0 near-dups), where any practical hyperplane-LSH config recalls
     * only ~40% of qualifying pairs — not oracle-able. At production
     * scale a cosine evidence feed would come from a corpus whose dup
-    * pairs ARE near-angle (p → 1), where [[Ann.cosineLshPairs]] is the
+    * pairs ARE near-angle (p → 1), where [[Ann.cosineLshPairsPortable]] is the
     * drop-in (recall spec at LlmOpsSpec). */
   def dedupEvidenceUnion(s: SparkSession, dir: String): DataFrame = {
     // ONE cached per-doc trunk — (doc, minhash sig, shingle-hash set) in
@@ -2007,11 +2007,8 @@ object LlmOps {
     * PortableSimHash60), which made this gate FULLY ORACLED: DuckDB
     * recomputes token hashes (the hash60 convention), the ±1 votes,
     * the sign bits and the brute-force Hamming join, valid against the
-    * banded plan because the paired-block geometry has recall 1 within
-    * the radius (pigeonhole). The 64-bit FNV [[Dedup.simhashPairs]]
-    * stays available (codegen'd, marginally cheaper per token) with
-    * its banding==exact spec; this gate runs the variant a cross-engine
-    * deployment would. */
+    * banded plan because the block-key geometry has recall 1 within
+    * the radius (pigeonhole). */
   def dedupSimhash(s: SparkSession, dir: String): DataFrame =
     Dedup.simhashPairsPortable(Tables.documents(s, dir), maxHamming = 6)
       .orderBy(col("doc_a"), col("doc_b"))
@@ -2041,7 +2038,8 @@ object LlmOps {
   }
 
   /** Embedding-cosine near-dup pairs, exact threshold variant (oracled;
-    * [[Ann.cosineLshPairs]] is the banded scale path, spec-verified). */
+    * [[Ann.cosineLshPairsPortable]] is the banded scale path, gated by
+    * d_embed_cosine_lsh). */
   def dedupEmbedCosine(s: SparkSession, dir: String): DataFrame =
     Ann.cosinePairs(Tables.embeddings(s, dir), threshold = 0.44)
       .orderBy(col("va"), col("vb"))
@@ -2059,8 +2057,7 @@ object LlmOps {
     * from md5("p:i"), projections as exact integer sums of
     * floor-quantized components), so DuckDB recomputes every bucket
     * key, the candidate join AND the exact-cosine verify — banding is
-    * certified, not just spec'd. (The splitmix64 codegen family keeps
-    * its recall spec as the non-oracled production alternative.)
+    * certified, not just spec'd.
     *
     * Parameterization is driven by the TARGET ANGLE, bounded below by
     * bucket occupancy: sign-agreement probability is p = 1 − θ/π, and a

@@ -94,7 +94,7 @@ object Ann {
   /** Embedding-cosine near-duplicate pairs: ALL pairs with
     * round(cosine, 6) ≥ threshold. Exact O(n²) verification path (norms
     * computed once; rounding makes the threshold boundary cross-engine
-    * deterministic). The scale path is [[cosineLshPairs]]. */
+    * deterministic). The scale path is [[cosineLshPairsPortable]]. */
   def cosinePairs(embeddings: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spread = graft.util.Partitioning.spreadIfNarrow(embeddings)
@@ -119,43 +119,24 @@ object Ann {
     * 16 B; the verify join touches candidates only — never n².
     *
     * All T·B sign bits come from the one-pass codegen'd
-    * [[org.apache.spark.sql.graft.CosineLshKeys]] expression (Rademacher
-    * hyperplanes derived by hashing — no driver-side plane matrix, no
-    * dimension-probe job, no plan literals, classloader-independent).
-    * Deduplication of multi-table hits happens once, AFTER the verify
-    * joins (one exchange; duplicate candidates are rare at sane
-    * planesPerTable, so verifying them twice is cheaper than an extra
-    * pre-verify distinct exchange). */
-  def cosineLshPairs(embeddings: DataFrame, threshold: Double,
-      planesPerTable: Int = 16, tables: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    cosineLshPairsWith(
-      org.apache.spark.sql.graft.CosineLshKeys
-        .cosine_lsh_keys(_, planesPerTable, tables),
-      embeddings, threshold, idCol, vecCol)
-
-  /** [[cosineLshPairs]] on the ENGINE-PORTABLE plane family
-    * ([[org.apache.spark.sql.graft.PortableCosineLshKeys]]: md5-derived
-    * Rademacher signs, floor-quantized integer projections) — every
-    * bucket key is exactly recomputable in ANSI SQL, so a gate on this
-    * path is fully DuckDB-oracle-able (banding AND verify), not just
-    * spec-verified. Same recall law; boundary shift from quantization is
-    * ≤ dim·2^-20 per projection (geometry only — candidates are still
-    * verified with the exact cosine). */
+    * [[org.apache.spark.sql.graft.PortableCosineLshKeys]] expression
+    * (md5-derived Rademacher signs, floor-quantized integer
+    * projections), so every bucket key is exactly recomputable in ANSI
+    * SQL and a gate on this path is fully DuckDB-oracle-able (banding
+    * AND verify). The boundary shift from quantization is ≤ dim·2^-20
+    * per projection (geometry only — candidates are still verified with
+    * the exact cosine). Deduplication of multi-table hits happens once,
+    * AFTER the verify joins (one exchange; duplicate candidates are rare
+    * at sane planesPerTable, so verifying them twice is cheaper than an
+    * extra pre-verify distinct exchange). */
   def cosineLshPairsPortable(embeddings: DataFrame, threshold: Double,
       planesPerTable: Int = 16, tables: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    cosineLshPairsWith(
-      org.apache.spark.sql.graft.PortableCosineLshKeys
-        .portable_cosine_lsh_keys(_, planesPerTable, tables),
-      embeddings, threshold, idCol, vecCol)
-
-  private def cosineLshPairsWith(keysOf: Column => Column,
-      embeddings: DataFrame, threshold: Double,
-      idCol: String, vecCol: String): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spread = graft.util.Partitioning.spreadIfNarrow(embeddings)
     val banded = spread.select(col(idCol).as("doc"),
-      posexplode(keysOf(col(vecCol))).as(Seq("band", "bkey")))
+      posexplode(org.apache.spark.sql.graft.PortableCosineLshKeys
+        .portable_cosine_lsh_keys(col(vecCol), planesPerTable, tables))
+        .as(Seq("band", "bkey")))
     val cands = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col("x.doc") < col("y.doc"))
@@ -171,18 +152,10 @@ object Ann {
   }
 
   /** Bit-signature of `planes` random-hyperplane signs: one table of the
-    * codegen'd [[org.apache.spark.sql.graft.CosineLshKeys]] expression
-    * (Rademacher hyperplanes hashed from (plane, dim) — no driver plane
-    * matrix, no interpreted higher-order-function stage; the previous
-    * per-plane `aggregate(zip_with(…))` formulation re-walked the vector
-    * once per plane in the interpreted evaluator). */
-  def lshSignature(vec: Column, planes: Int): Column =
-    org.apache.spark.sql.graft.CosineLshKeys
-      .cosine_lsh_keys(vec, planes, 1).getItem(0)
-
-  /** [[lshSignature]] on the engine-portable plane family (see
-    * [[cosineLshPairsPortable]]) — the signature bits are exactly
-    * recomputable in ANSI SQL. */
+    * codegen'd [[org.apache.spark.sql.graft.PortableCosineLshKeys]]
+    * expression, so the signature bits are exactly recomputable in ANSI
+    * SQL (no driver plane matrix, no interpreted higher-order-function
+    * stage). */
   def lshSignaturePortable(vec: Column, planes: Int): Column =
     org.apache.spark.sql.graft.PortableCosineLshKeys
       .portable_cosine_lsh_keys(vec, planes, 1).getItem(0)
@@ -634,30 +607,18 @@ object Ann {
   }
 
   /** Approximate top-k with multi-probe: candidates differ from the
-    * query's LSH signature by at most `probe` sign bits; exact cosine
-    * re-ranks. Candidate fraction ≈ Σ_{i≤probe} C(planes,i) / 2^planes.
-    * Recall tracks how concentrated similarity is — for near-random
-    * corpora it approaches the candidate fraction; for clustered
-    * real-world embeddings it is far higher. */
-  def lshTopK(embeddings: DataFrame, queryVecId: Long, k: Int, planes: Int,
-      probe: Int = 1, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    lshTopKWith(lshSignature(_, planes), embeddings, queryVecId, k, probe,
-      idCol, vecCol)
-
-  /** [[lshTopK]] on the engine-portable plane family — signature,
-    * multi-probe Hamming test and re-rank all exactly recomputable in
-    * ANSI SQL, making the gate fully oracle-able. */
+    * query's LSH signature ([[lshSignaturePortable]]) by at most `probe`
+    * sign bits; exact cosine re-ranks. Signature, Hamming test and
+    * re-rank are all exactly recomputable in ANSI SQL, so the gate is
+    * fully oracle-able. Candidate fraction ≈ Σ_{i≤probe} C(planes,i) /
+    * 2^planes. Recall tracks how concentrated similarity is — for
+    * near-random corpora it approaches the candidate fraction; for
+    * clustered real-world embeddings it is far higher. */
   def lshTopKPortable(embeddings: DataFrame, queryVecId: Long, k: Int,
       planes: Int, probe: Int = 1, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame =
-    lshTopKWith(lshSignaturePortable(_, planes), embeddings, queryVecId, k,
-      probe, idCol, vecCol)
-
-  private def lshTopKWith(sigOf: Column => Column, embeddings: DataFrame,
-      queryVecId: Long, k: Int, probe: Int,
-      idCol: String, vecCol: String): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = {
     val signed = embeddings.select(col(idCol), col(vecCol),
-      sigOf(col(vecCol)).as("sig"))
+      lshSignaturePortable(col(vecCol), planes).as("sig"))
     val q = signed.filter(col(idCol) === queryVecId)
       .select(col(vecCol).as("qvec"), col("sig").as("qsig"))
     signed.filter(col(idCol) =!= queryVecId)

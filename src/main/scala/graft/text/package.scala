@@ -131,10 +131,6 @@ package object text {
       .otherwise("fr")
   }
 
-  /** 64-bit SimHash (custom codegen expression) for near-dup bucketing. */
-  def simhash64(c: Column): Column =
-    org.apache.spark.sql.graft.SimHash64.simhash64(c)
-
   /** Winnowing document fingerprint (Schleimer/Wilkerson/Aiken, SIGMOD'03
     * — the MOSS rolling-hash scheme): hash every word k-gram, slide a
     * window of w hashes, keep each window's minimum, dedupe and sort.

@@ -1,6 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Partition-count hygiene for CPU-heavy map stages. */
 object Partitioning {
@@ -14,6 +15,19 @@ object Partitioning {
     * shuffle of the corpus, so wide inputs pass through untouched. */
   def spreadIfNarrow(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
+    if (plannedPartitions(df) >= target) df else df.repartition(target)
   }
+
+  /** The input's partition count, decided from its plan without running
+    * a job. A plan with a shuffle is adaptive, and asking its RDD for
+    * partitions would execute every shuffle stage; its planned top
+    * partitioning gives the count instead (the exchange's count before
+    * AQE coalescing, 0 when the top operator keeps none, which reads as
+    * narrow). A plan without one is a scan whose partitions are listed,
+    * not computed. */
+  private def plannedPartitions(df: DataFrame): Int =
+    df.queryExecution.executedPlan match {
+      case aqe: AdaptiveSparkPlanExec => aqe.executedPlan.outputPartitioning.numPartitions
+      case _ => df.rdd.getNumPartitions
+    }
 }

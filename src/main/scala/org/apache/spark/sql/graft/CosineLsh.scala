@@ -9,116 +9,13 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, Double
 /** One-pass multi-table sign-random-projection (hyperplane LSH) keys for
   * an embedding vector: `tables` bucket keys, each packing
   * `planesPerTable` sign bits of Rademacher (±1) hyperplane projections.
-  * Plane component for (plane p, dim i) is the sign bit of splitmix64
-  * mixed over (p, i) — deterministic, seedable from the plan, and
-  * requiring NO driver-side plane matrix: no dimension-probe job, no
-  * giant literal in the plan, and the whole signature stays inside
-  * whole-stage codegen as one tight loop (the Column-combinator
-  * formulation needed an interpreted higher-order-function stage and a
-  * LIMIT-1 probe of the corpus to size the plane literals).
-  *
-  * Sign-random-projection guarantees (Charikar, STOC'02): two vectors at
-  * angle θ agree on one sign bit with p = 1 − θ/π, share a table's
-  * bucket with p^planes, are recalled by ≥1 of T tables with
-  * 1 − (1 − p^planes)^T. Rademacher entries satisfy the same family
-  * guarantees as Gaussian planes (Achlioptas, JCSS'03 sparse/signed
-  * random projections).
-  */
-case class CosineLshKeys(child: Expression, planesPerTable: Int, tables: Int)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  require(planesPerTable >= 1 && planesPerTable <= 62,
-    "table keys are packed into one long")
-  require(tables >= 1)
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(TypeCollection(ArrayType(FloatType), ArrayType(DoubleType)))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    CosineLshKeys.compute(input.asInstanceOf[ArrayData], isFloat,
-      planesPerTable, tables)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = CosineLshKeys.getClass.getName.stripSuffix("$") + "$"
-    defineCodeGen(ctx, ev, input =>
-      s"(${classOf[ArrayData].getName}) $cls.MODULE$$.compute($input, $isFloat, $planesPerTable, $tables)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CosineLshKeys =
-    copy(child = newChild)
-}
-
-object CosineLshKeys {
-  private final val Golden = 0x9e3779b97f4a7c15L
-
-  private def mix(z0: Long): Long = {
-    var z = z0
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
-  def compute(vec: ArrayData, isFloat: Boolean, b: Int, t: Int): ArrayData = {
-    val nPlanes = b * t
-    val proj = new Array[Double](nPlanes)
-    val n = vec.numElements()
-    var i = 0
-    while (i < n) {
-      // null elements contribute 0 (consistent with skipping the dim)
-      val v: Double =
-        if (vec.isNullAt(i)) 0.0
-        else if (isFloat) vec.getFloat(i).toDouble
-        else vec.getDouble(i)
-      if (v != 0.0) {
-        // per-dim base hash; per-plane remix — one multiply-free sign
-        // stream per (plane, dim), independent across planes
-        val base = mix(i * Golden + 0x51afd7ed558ccd89L)
-        var p = 0
-        while (p < nPlanes) {
-          if ((mix(base + p * Golden) & 0x8000000000000000L) == 0L) proj(p) += v
-          else proj(p) -= v
-          p += 1
-        }
-      }
-      i += 1
-    }
-    val keys = new Array[Long](t)
-    var tt = 0
-    while (tt < t) {
-      var key = 0L
-      var j = 0
-      while (j < b) {
-        key = (key << 1) | (if (proj(tt * b + j) >= 0) 1L else 0L)
-        j += 1
-      }
-      keys(tt) = key
-      tt += 1
-    }
-    new GenericArrayData(keys)
-  }
-
-  def cosine_lsh_keys(c: Column, planesPerTable: Int, tables: Int): Column =
-    ColumnBridge.column(
-      CosineLshKeys(ColumnBridge.expression(c), planesPerTable, tables))
-}
-
-/** The ENGINE-PORTABLE twin of [[CosineLshKeys]]: the same multi-table
-  * sign-random-projection family, but with every quantity an ANSI-SQL
-  * engine can recompute exactly — so gates built on it are fully
-  * DuckDB-oracle-able (the discipline that retired d_simhash's
-  * rows-only status, applied to hyperplane LSH):
+  * Every quantity is one an ANSI-SQL engine can recompute exactly, so
+  * gates built on these keys are fully DuckDB-oracle-able:
   *
   *  - plane component sign(p, i) for global plane p and dimension i is
   *    the high bit of md5("p:i") — in SQL,
   *    `substr(md5(p || ':' || i), 1, 1) BETWEEN '0' AND '7'` → +1
-  *    else −1 (Rademacher entries; same Charikar/Achlioptas family
-  *    guarantees as the splitmix64 variant);
+  *    else −1;
   *  - vector components quantize to the 2^-20 grid by FLOOR — q_i =
   *    floor(x_i · 2^20) as a long. Float→double widening and the
   *    power-of-two product are IEEE-exact, and floor has no tie
@@ -128,11 +25,16 @@ object CosineLshKeys {
   *    no float-summation-order ambiguity between engines — and the
   *    key bit is the exact integer test `proj ≥ 0`.
   *
-  * Quantization moves each plane boundary by ≤ dim·2^-20 — recall
-  * shifts imperceptibly (bucket geometry only); precision is untouched
-  * because candidates are verified with the exact cosine downstream.
-  * The sign matrix (nPlanes × dim, ±1 bytes) is computed once per
-  * (shape) and cached statically — md5 never runs per row. */
+  * Sign-random-projection guarantees (Charikar, STOC'02): two vectors at
+  * angle θ agree on one sign bit with p = 1 − θ/π, share a table's
+  * bucket with p^planes, are recalled by ≥1 of T tables with
+  * 1 − (1 − p^planes)^T. Rademacher entries satisfy the same family
+  * guarantees as Gaussian planes (Achlioptas, JCSS'03). Quantization
+  * moves each plane boundary by ≤ dim·2^-20 — recall shifts
+  * imperceptibly (bucket geometry only); precision is untouched because
+  * candidates are verified with the exact cosine downstream. The sign
+  * matrix (nPlanes × dim, ±1 bytes) is computed once per shape and
+  * cached statically — md5 never runs per row. */
 case class PortableCosineLshKeys(child: Expression, planesPerTable: Int, tables: Int)
     extends UnaryExpression with ExpectsInputTypes {
 

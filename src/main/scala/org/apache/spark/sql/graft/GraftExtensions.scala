@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * {{{
   * SparkSession.builder().withExtensions(new GraftExtensions)...
   * // or: --conf spark.sql.extensions=org.apache.spark.sql.graft.GraftExtensions
-  * spark.sql("SELECT simhash64(text), minhash_signature(text, 3, 64) FROM docs")
+  * spark.sql("SELECT portable_simhash60(text), minhash_signature(text, 3, 64) FROM docs")
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -21,11 +21,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(extensions: SparkSessionExtensions): Unit = {
     extensions.injectFunction((
-      FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(text) - 64-bit SimHash of whitespace-tokenized text"),
+      FunctionIdentifier("portable_simhash60"),
+      info("portable_simhash60", "portable_simhash60(text) - 60-bit SimHash of whitespace tokens"),
       (children: Seq[Expression]) => {
-        require(children.size == 1, "simhash64(text)")
-        SimHash64(children.head)
+        require(children.size == 1, "portable_simhash60(text)")
+        PortableSimHash60(children.head)
       }))
 
     extensions.injectFunction((
@@ -76,27 +76,27 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
 
     extensions.injectFunction((
-      FunctionIdentifier("cosine_lsh_keys"),
-      info("cosine_lsh_keys",
-        "cosine_lsh_keys(vec, planesPerTable, tables) - multi-table sign-random-projection bucket keys"),
+      FunctionIdentifier("portable_cosine_lsh_keys"),
+      info("portable_cosine_lsh_keys",
+        "portable_cosine_lsh_keys(vec, planesPerTable, tables) - multi-table sign-random-projection bucket keys"),
       (children: Seq[Expression]) => {
-        require(children.size == 3, "cosine_lsh_keys(vec, planesPerTable, tables)")
+        require(children.size == 3, "portable_cosine_lsh_keys(vec, planesPerTable, tables)")
         // the parameters configure the expression at build time, so they
         // must be literals — eval() on a non-foldable (column/cast-of-
         // column) child here would throw an opaque UnresolvedException
         def intLit(e: Expression, name: String): Int = {
           if (!e.foldable) {
             throw org.apache.spark.sql.errors.QueryCompilationErrors
-              .nonFoldableArgumentError("cosine_lsh_keys", name,
+              .nonFoldableArgumentError("portable_cosine_lsh_keys", name,
                 org.apache.spark.sql.types.IntegerType)
           }
           e.eval() match {
             case n: Number => n.intValue()
             case other => throw new IllegalArgumentException(
-              s"cosine_lsh_keys: $name must be a non-null integer literal, got $other")
+              s"portable_cosine_lsh_keys: $name must be a non-null integer literal, got $other")
           }
         }
-        CosineLshKeys(children.head,
+        PortableCosineLshKeys(children.head,
           intLit(children(1), "planesPerTable"),
           intLit(children(2), "tables"))
       }))

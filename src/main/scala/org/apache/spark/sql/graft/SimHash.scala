@@ -6,92 +6,17 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{AbstractDataType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** 64-bit SimHash of whitespace-tokenized text — near-duplicate
-  * fingerprinting where similar documents land within a small Hamming
-  * distance (pair with builtin `^` and `bit_count`).
-  *
-  * Token hashing is a 64-bit FNV-1a over the token bytes (deterministic,
-  * dependency-free); each token votes its bits ±1, the sign of each
-  * accumulated bit becomes the output bit. Codegen-capable scalar
-  * expression (reference-object pattern), so dedup pipelines stay inside
-  * whole-stage codegen.
-  */
-case class SimHash64(child: Expression)
-    extends UnaryExpression with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(input: Any): Any =
-    SimHash64.simhash(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cls = SimHash64.getClass.getName.stripSuffix("$") + "$"
-    defineCodeGen(ctx, ev,
-      input => s"$cls.MODULE$$.simhash($input.toString())")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-object SimHash64 {
-  private final val FnvOffset = 0xcbf29ce484222325L
-  private final val FnvPrime  = 0x100000001b3L
-
-  def fnv1a64(s: String): Long = {
-    var h = FnvOffset
-    val bytes = s.getBytes("UTF-8")
-    var i = 0
-    while (i < bytes.length) {
-      h ^= (bytes(i) & 0xffL)
-      h *= FnvPrime
-      i += 1
-    }
-    h
-  }
-
-  def simhash(text: String): Long = {
-    val votes = new Array[Int](64)
-    var start = 0
-    val n = text.length
-    var i = 0
-    while (i <= n) {
-      if (i == n || Character.isWhitespace(text.charAt(i))) {
-        if (i > start) {
-          val h = fnv1a64(text.substring(start, i))
-          var b = 0
-          while (b < 64) {
-            if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-            b += 1
-          }
-        }
-        start = i + 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    out
-  }
-
-  def simhash64(c: Column): Column =
-    ColumnBridge.column(SimHash64(ColumnBridge.expression(c)))
-}
-
-/** Engine-PORTABLE 60-bit SimHash: identical votes to [[SimHash64]] but
-  * the per-token hash is the repo's cross-engine md5 convention (first
-  * 15 hex chars of md5 → 60-bit BIGINT, = `Sketch.hash60`), so the
-  * whole signature — token hash, ±1 votes, sign bits — replays in
-  * DuckDB SQL and the d_simhash gate is hash-verifiable instead of
-  * rows-only. 60 bits (not 64) because 15 hex chars is the largest
-  * md5 prefix both engines parse into a non-negative BIGINT; the
-  * Hamming-radius banding adapts (10 six-bit blocks, paired keys).
-  * Same whitespace tokenization as [[SimHash64]]. */
+/** Engine-portable 60-bit SimHash of whitespace-tokenized text
+  * (Charikar, STOC 2002): near-duplicate fingerprinting where similar
+  * documents land within a small Hamming distance. Each token's hash is
+  * the repo's cross-engine md5 convention (first 15 hex chars of md5 →
+  * 60-bit BIGINT, = `Sketch.hash60`); each token votes its bits ±1, and
+  * the sign of each accumulated bit becomes the output bit. The whole
+  * signature therefore replays in DuckDB SQL, which is what makes the
+  * d_simhash gate hash-verifiable. 60 bits (not 64) because 15 hex chars
+  * is the largest md5 prefix both engines parse into a non-negative
+  * BIGINT. Codegen-capable scalar expression (reference-object pattern),
+  * so dedup pipelines stay inside whole-stage codegen. */
 case class PortableSimHash60(child: Expression)
     extends UnaryExpression with org.apache.spark.sql.catalyst.expressions.ExpectsInputTypes {
 

@@ -40,7 +40,7 @@ class CodegenSpec extends AnyFunSuite {
     }
   }
 
-  test("SimHash64 + MinHashSignature generate compiling Java") {
+  test("PortableSimHash60 + MinHashSignature generate compiling Java") {
     codegenOnly {
       // 10 tokens, differing only in the last → 8 shingles, 7 shared:
       // most minhash slots should take their minimum from the shared set
@@ -48,7 +48,7 @@ class CodegenSpec extends AnyFunSuite {
         "a1 b2 c3 d4 e5 f6 g7 h8 i9 delta",
         "a1 b2 c3 d4 e5 f6 g7 h8 i9 epsilon").toDF("t")
       val r = df.select(
-        org.apache.spark.sql.graft.SimHash64.simhash64(col("t")).as("sh"),
+        org.apache.spark.sql.graft.PortableSimHash60.portable_simhash60(col("t")).as("sh"),
         org.apache.spark.sql.graft.MinHashSignature.minhash_signature(col("t"), 3, 8).as("mh"))
         .collect()
       assert(r.length == 2)
@@ -80,14 +80,14 @@ class CodegenSpec extends AnyFunSuite {
     }
   }
 
-  test("CosineLshKeys generates compiling Java, is deterministic and locality-sensitive") {
+  test("PortableCosineLshKeys generates compiling Java, is deterministic and locality-sensitive") {
     codegenOnly {
-      import org.apache.spark.sql.graft.CosineLshKeys.cosine_lsh_keys
+      import org.apache.spark.sql.graft.PortableCosineLshKeys.portable_cosine_lsh_keys
       val base = Array.tabulate(32)(i => math.sin(i * 1.7).toFloat)
       val near = base.map(_ * 1.001f) // same direction → identical signs
       val far = base.map(-_)          // opposite direction → all signs flip
       val df = Seq((1L, base), (2L, near), (3L, far)).toDF("id", "v")
-      val r = df.select(col("id"), cosine_lsh_keys(col("v"), 12, 6).as("k"))
+      val r = df.select(col("id"), portable_cosine_lsh_keys(col("v"), 12, 6).as("k"))
         .collect().map(x => x.getLong(0) -> x.getSeq[Long](1)).toMap
       assert(r(1).length == 6 && r(1) == r(2), "colinear vectors must share all keys")
       assert(r(1).zip(r(3)).forall { case (a, b) => a != b },
@@ -95,20 +95,20 @@ class CodegenSpec extends AnyFunSuite {
       assert(r(1).forall(k => k >= 0 && k < (1L << 12)))
       // float and double inputs produce the same keys
       val dd = Seq((1L, base.map(_.toDouble))).toDF("id", "v")
-        .select(cosine_lsh_keys(col("v"), 12, 6)).collect()(0).getSeq[Long](0)
+        .select(portable_cosine_lsh_keys(col("v"), 12, 6)).collect()(0).getSeq[Long](0)
       assert(dd == r(1))
     }
   }
 
-  test("ANN lshSignature rides CosineLshKeys — no interpreted lambda in the plan") {
+  test("ANN lshSignaturePortable rides PortableCosineLshKeys — no interpreted lambda in the plan") {
     codegenOnly {
       val emb = Tables.embeddings(spark, SharedSpark.sf0001)
       val signed = emb.select(col("vec_id"),
-        graft.similarity.Ann.lshSignature(col("embedding"), 8).as("sig"))
+        graft.similarity.Ann.lshSignaturePortable(col("embedding"), 8).as("sig"))
       val plan = signed.queryExecution.optimizedPlan.toString.toLowerCase
       assert(!plan.contains("lambdafunction") && !plan.contains("aggregate("),
         s"interpreted HOF stage survived in:\n$plan")
-      assert(plan.contains("cosinelshkeys") || plan.contains("cosine_lsh_keys"))
+      assert(plan.contains("portablecosinelshkeys") || plan.contains("portable_cosine_lsh_keys"))
       // signature values sit in the declared bit range and discriminate
       val sigs = signed.collect().map(_.getLong(1))
       assert(sigs.forall(s => s >= 0 && s < (1L << 8)))

@@ -24,17 +24,17 @@ class ExtensionsSpec extends AnyFunSuite {
         .config("spark.ui.enabled", "false")
         .getOrCreate()
       val row = spark.sql(
-        """SELECT simhash64('alpha beta gamma') AS sh,
+        """SELECT portable_simhash60('alpha beta gamma') AS sh,
           |  size(minhash_signature('alpha beta gamma delta', 3, 16)) AS mh_k,
           |  distinct_shingles('A b c d', 2) AS sh2,
           |  set_not_nullable('x') AS nn,
           |  vec_dot(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) AS dp,
           |  vec_l2norm(array(3.0D, 4.0D)) AS nrm,
           |  trigram_entropy('aaaa') AS ent,
-          |  size(cosine_lsh_keys(array(1.0D, -2.0D, 0.5D), 8, 4)) AS lshk""".stripMargin)
+          |  size(portable_cosine_lsh_keys(array(1.0D, -2.0D, 0.5D), 8, 4)) AS lshk""".stripMargin)
         .collect().head
       assert(row.getLong(0) ==
-        org.apache.spark.sql.graft.SimHash64.simhash("alpha beta gamma"))
+        org.apache.spark.sql.graft.PortableSimHash60.simhash("alpha beta gamma"))
       assert(row.getInt(1) == 16)
       assert(row.getSeq[String](2) == Seq("a b", "b c", "c d"))
       assert(row.getString(3) == "x")

@@ -301,7 +301,7 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("simhash banding: high recall of true near-dups at tight hamming") {
-    val sh = Dedup.simhashPairs(docs, maxHamming = 6).collect()
+    val sh = Dedup.simhashPairsPortable(docs, maxHamming = 6).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = truePairs.count(sh.contains).toDouble / truePairs.size
     assert(recall >= 0.9, s"simhash recall $recall; found ${sh.size} pairs")
@@ -331,16 +331,22 @@ class LlmOpsSpec extends AnyFunSuite {
     // guaranteed (not probabilistic) recall: compare against the exact
     // all-pairs hamming join on the same fingerprints
     val sh = docs.select(col("doc_id").as("doc"),
-      graft.text.simhash64(graft.text.norm_text(col("text"))).as("sh"))
+      org.apache.spark.sql.graft.PortableSimHash60.portable_simhash60(
+        graft.text.norm_text(col("text"))).as("sh"))
     val a = sh.select(col("doc").as("da"), col("sh").as("ha"))
     val b = sh.select(col("doc").as("db"), col("sh").as("hb"))
-    val exact = a.crossJoin(b).filter(col("da") < col("db"))
-      .filter(bit_count(col("ha").bitwiseXOR(col("hb"))) <= 6)
-      .select(col("da"), col("db"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val banded = Dedup.simhashPairs(docs, maxHamming = 6).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(banded == exact, s"banded=${banded.size} exact=${exact.size}")
+    val dist = a.crossJoin(b).filter(col("da") < col("db"))
+      .select(col("da"), col("db"), bit_count(col("ha").bitwiseXOR(col("hb"))).as("d"))
+      .filter(col("d") <= 8)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2)))
+    // radius 6 as before, plus both sides of the three-block/two-block
+    // key switch (7 is the widest three-block radius, 8 the two-block one)
+    for (h <- Seq(6, 7, 8)) {
+      val exact = dist.collect { case (p, d) if d <= h => p }.toSet
+      val banded = Dedup.simhashPairsPortable(docs, maxHamming = h).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(banded == exact, s"h=$h banded=${banded.size} exact=${exact.size}")
+    }
   }
 
   test("portable simhash60: JVM hash matches hash60 Column, banding exact, recall holds") {
@@ -368,6 +374,57 @@ class LlmOpsSpec extends AnyFunSuite {
     // locality: the true near-dup pairs are still recalled at radius 6
     val recall = truePairs.count(banded.contains).toDouble / truePairs.size
     assert(recall >= 0.9, s"portable simhash recall $recall")
+  }
+
+  test("simhashPairsPortable == brute-force Hamming join at every radius 0-8 (generated)") {
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.Prop.propBoolean
+    import org.scalacheck.rng.Seed
+    import org.apache.spark.sql.graft.PortableSimHash60
+    val vocab = Vector.tabulate(40)(i => s"w$i")
+    val genText: Gen[Vector[String]] =
+      Gen.choose(0, 60).flatMap(Gen.containerOfN[Vector, String](_, Gen.oneOf(vocab)))
+    // substitute / insert / delete one token at a time: a few edits of
+    // a shared base put pair distances on both sides of every radius
+    def edited(base: Vector[String]): Gen[Vector[String]] =
+      Gen.choose(0, 4).flatMap(Gen.listOfN(_,
+        Gen.zip(Gen.choose(0, 2), Gen.choose(0, 999), Gen.oneOf(vocab))))
+        .map(_.foldLeft(base) { case (t, (op, at, w)) =>
+          val i = if (t.isEmpty) 0 else at % t.size
+          if (op == 1 || t.isEmpty) t.patch(i, Seq(w), 0)
+          else t.patch(i, if (op == 0) Seq(w) else Nil, 1)
+        })
+    val genCorpus: Gen[Seq[String]] = for {
+      bases <- Gen.choose(1, 3).flatMap(Gen.listOfN(_, genText))
+      variants <- Gen.listOfN(12, Gen.oneOf(bases).flatMap(edited))
+      dup <- Gen.oneOf(variants)
+    } yield (bases ++ variants :+ dup :+ Vector.empty[String]).map(_.mkString(" "))
+    val seen = scala.collection.mutable.Set[Int]()
+    def agrees(texts: Seq[String]): Boolean = {
+      val corpus = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      val sh = corpus.select(col("doc_id"),
+        PortableSimHash60.portable_simhash60(norm_text(col("text"))))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val dist = for (x <- sh; y <- sh if x._1 < y._1)
+        yield ((x._1, y._1), java.lang.Long.bitCount(x._2 ^ y._2))
+      seen ++= dist.map(_._2)
+      try (0 to 8).forall { h =>
+        val got = Dedup.simhashPairsPortable(corpus, maxHamming = h).collect()
+          .map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toSet
+        got == dist.filter(_._2 <= h).toSet
+      } finally graft.util.IntermediateCaches.releaseAll(blocking = true)
+    }
+    // fixed edge cases: empty input, one document, duplicates, empty text
+    for (texts <- Seq(Seq.empty[String], Seq("alpha beta"),
+        Seq("alpha beta", "alpha beta", ""), Seq("", "")))
+      assert(agrees(texts), s"disagrees on $texts")
+    val prop = Prop.forAllNoShrink(genCorpus)(texts => agrees(texts) :| s"$texts")
+    val res = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(8).withInitialSeed(Seed(20261020L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    // the generated pairs straddle every radius: one sits at each distance
+    assert((0 to 9).forall(seen.contains), s"distances seen: ${seen.toSeq.sorted}")
   }
 
   test("winnowing fingerprints: shared runs overlap, short docs empty") {
@@ -405,7 +462,7 @@ class LlmOpsSpec extends AnyFunSuite {
     val exact = Ann.cosinePairs(df, 0.9).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.size >= 10) // all planted pairs are above 0.9
-    val lsh = Ann.cosineLshPairs(df, 0.9, planesPerTable = 16, tables = 8).collect()
+    val lsh = Ann.cosineLshPairsPortable(df, 0.9, planesPerTable = 16, tables = 8).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // precision is exact by construction (candidates verified with the
     // same rounded cosine); recall of genuine near-dups must be total
@@ -414,16 +471,16 @@ class LlmOpsSpec extends AnyFunSuite {
     // verified values match the exact path
     val exactSims = Ann.cosinePairs(df, 0.9).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    Ann.cosineLshPairs(df, 0.9, 16, 8).collect().foreach { r =>
+    Ann.cosineLshPairsPortable(df, 0.9, 16, 8).collect().foreach { r =>
       assert(exactSims((r.getLong(0), r.getLong(1))) == r.getDouble(2))
     }
   }
 
   test("PORTABLE embedding-cosine LSH pairs recall planted near-dups") {
-    // same construction as the codegen-family spec: the portable
-    // (md5-sign, floor-quantized) plane family must keep the recall
-    // law — total recall of genuine near-dups at 16 planes x 8 tables —
-    // and exact-verified precision by construction
+    // the spec above on a second draw (seed 11): the (md5-sign,
+    // floor-quantized) plane family must keep the recall law — total
+    // recall of genuine near-dups at 16 planes x 8 tables — and
+    // exact-verified precision by construction
     val rng = new scala.util.Random(11)
     val dim = 32
     def vec() = Array.fill(dim)(rng.nextGaussian().toFloat)
@@ -469,13 +526,6 @@ class LlmOpsSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     val recall = brute.count(lsh.contains).toDouble / brute.size
     assert(recall >= 0.3, s"portable lsh recall $recall")
-  }
-
-  test("ann LSH recall vs brute force") {
-    val brute = Ann.bruteForceTopK(emb, 0L, 10).collect().map(_.getLong(0)).toSet
-    val lsh = Ann.lshTopK(emb, 0L, 10, planes = 4, probe = 2).collect().map(_.getLong(0)).toSet
-    val recall = brute.count(lsh.contains).toDouble / brute.size
-    assert(recall >= 0.3, s"lsh recall $recall (4 planes, probe 2 → ~11/16 of signature space)")
   }
 
   test("ann IVF recall vs brute force") {
@@ -1211,11 +1261,12 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(top.length == 5 && top.forall(r => !r.getDouble(1).isNaN))
   }
 
-  test("simhash64 is deterministic and locality-sensitive") {
-    val h1 = org.apache.spark.sql.graft.SimHash64.simhash("the quick brown fox jumps over dog")
-    val h2 = org.apache.spark.sql.graft.SimHash64.simhash("the quick brown fox jumps over dog")
-    val h3 = org.apache.spark.sql.graft.SimHash64.simhash("the quick brown fox leaps over dog")
-    val far = org.apache.spark.sql.graft.SimHash64.simhash("completely different words entirely here now")
+  test("portable simhash60 is deterministic and locality-sensitive") {
+    import org.apache.spark.sql.graft.PortableSimHash60.simhash
+    val h1 = simhash("the quick brown fox jumps over dog")
+    val h2 = simhash("the quick brown fox jumps over dog")
+    val h3 = simhash("the quick brown fox leaps over dog")
+    val far = simhash("completely different words entirely here now")
     assert(h1 == h2)
     assert(java.lang.Long.bitCount(h1 ^ h3) < java.lang.Long.bitCount(h1 ^ far))
   }

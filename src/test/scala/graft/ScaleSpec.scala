@@ -250,6 +250,24 @@ class ScaleSpec extends AnyFunSuite {
     assert(jobs <= CcFixtureJobs, s"connectedComponents launched $jobs jobs")
   }
 
+  test("spreadIfNarrow decides from the plan: no job on an aggregate, narrow scans still spread") {
+    import graft.util.Partitioning.spreadIfNarrow
+    val target = spark.sparkContext.defaultParallelism
+    val scan = Tables.documents(spark, sf0001)
+    val agg = scan.groupBy((col("doc_id") % 7).as("k")).agg(count(lit(1)).as("n"))
+    // asking an adaptive plan's RDD for its partition count executes
+    // every shuffle stage; the decision must come from planning alone
+    var spreadAgg = agg
+    assert(jobsOf { spreadAgg = spreadIfNarrow(agg) } == 0)
+    assert(spreadAgg.collect().toSet == agg.collect().toSet)
+    // the one-file scan the gates pass is still spread to the target
+    assert(scan.rdd.getNumPartitions < target)
+    assert(spreadIfNarrow(scan).rdd.getNumPartitions == target)
+    // and an input already as wide as the cluster passes through
+    val wide = scan.repartition(target)
+    assert(spreadIfNarrow(wide) eq wide)
+  }
+
   test("triangle partitioning spreads a hot bucket's pair work across cells") {
     // 40-doc hot bucket: unsalted, all C(40,2)=780 candidate pairs are
     // generated under ONE shuffle key. With salt=4 the work lands on the
@@ -289,9 +307,9 @@ class ScaleSpec extends AnyFunSuite {
     assert(graft.util.IntermediateCaches.trackedCount == 0)
   }
 
-  test("cosineLshPairs on an empty corpus returns an empty frame with the right schema") {
+  test("cosineLshPairsPortable on an empty corpus returns an empty frame with the right schema") {
     val empty = spark.emptyDataset[(Long, Array[Float])].toDF("vec_id", "embedding")
-    val out = graft.similarity.Ann.cosineLshPairs(empty, 0.5)
+    val out = graft.similarity.Ann.cosineLshPairsPortable(empty, 0.5)
     assert(out.columns.toSeq == Seq("va", "vb", "sim"))
     assert(out.count() == 0)
   }
