@@ -2,7 +2,7 @@
 # Paired same-session A/B of two revisions on one perfbench workload.
 #
 # Usage: scripts/ab.sh --base REV --change REV --workload curate|ingest \
-#          --pairs N [--seed S] [--out FILE]
+#          --pairs N [--seed S]
 #
 # Each revision is extracted with `git archive` into its own directory
 # under a fresh temporary directory (under $TMPDIR) and runs its own
@@ -14,7 +14,7 @@
 # with T the `run_seconds` of the change's BENCHMARK.json and S default 1.
 # A run that fails, or reports correct:false, stops the script.
 #
-# The record (default AB_<change sha7>.json in the current directory) holds,
+# The record, AB_<change sha7>.json in the current directory, holds,
 # per workload and per end-to-end metric of the change's BENCHMARK.json:
 #   base / change   median, q1, q3 of the N runs (inclusive quartiles)
 #   wins            pairs in which the change was better than the base
@@ -29,10 +29,10 @@
 set -euo pipefail
 
 usage() {
-  echo "usage: $0 --base REV --change REV --workload curate|ingest --pairs N [--seed S] [--out FILE]" >&2
+  echo "usage: $0 --base REV --change REV --workload curate|ingest --pairs N [--seed S]" >&2
   exit 2
 }
-base= change= workload= pairs= seed=1 out=
+base= change= workload= pairs= seed=1
 while [ $# -gt 0 ]; do
   case "$1" in
     --base) base=${2:-}; shift 2 ;;
@@ -40,7 +40,6 @@ while [ $# -gt 0 ]; do
     --workload) workload=${2:-}; shift 2 ;;
     --pairs) pairs=${2:-}; shift 2 ;;
     --seed) seed=${2:-}; shift 2 ;;
-    --out) out=${2:-}; shift 2 ;;
     *) usage ;;
   esac
 done
@@ -48,10 +47,10 @@ done
 [[ "$workload" =~ ^(curate|ingest)$ ]] || usage
 [[ "$pairs" =~ ^[1-9][0-9]*$ ]] && [[ "$seed" =~ ^[0-9]+$ ]] || usage
 
-repo=$(git rev-parse --show-toplevel)
+repo=$(cd "$(dirname "$0")/.." && pwd)
 base_sha=$(git -C "$repo" rev-parse --verify "$base^{commit}")
 change_sha=$(git -C "$repo" rev-parse --verify "$change^{commit}")
-out=${out:-AB_${change_sha:0:7}.json}
+out=AB_${change_sha:0:7}.json
 
 work=$(mktemp -d)
 trap 'echo "runs kept in $work" >&2' EXIT
