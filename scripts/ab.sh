@@ -4,6 +4,11 @@
 # Usage: scripts/ab.sh --base REV --change REV --workload curate|ingest \
 #          --pairs N [--seed S]
 #
+# N must be at least 10: the claim rule reads 9 wins in 10 pairs, and
+# below that the quartiles of a handful of runs are too narrow for
+# `resolved` to mean anything (at N = 2 the base IQR is half the range
+# of two runs, and a same-revision run read resolved).
+#
 # Each revision is extracted with `git archive` into its own directory
 # under a fresh temporary directory (under $TMPDIR) and runs its own
 # perfbench/run.py, so each side is built from its own sources. Each side
@@ -29,7 +34,7 @@
 set -euo pipefail
 
 usage() {
-  echo "usage: $0 --base REV --change REV --workload curate|ingest --pairs N [--seed S]" >&2
+  echo "usage: $0 --base REV --change REV --workload curate|ingest --pairs N(>=10) [--seed S]" >&2
   exit 2
 }
 base= change= workload= pairs= seed=1
@@ -46,6 +51,7 @@ done
 [ -n "$base" ] && [ -n "$change" ] || usage
 [[ "$workload" =~ ^(curate|ingest)$ ]] || usage
 [[ "$pairs" =~ ^[1-9][0-9]*$ ]] && [[ "$seed" =~ ^[0-9]+$ ]] || usage
+[ "$pairs" -ge 10 ] || { echo "$0: --pairs must be at least 10" >&2; usage; }
 
 repo=$(cd "$(dirname "$0")/.." && pwd)
 base_sha=$(git -C "$repo" rev-parse --verify "$base^{commit}")
@@ -94,7 +100,7 @@ runs = {side: [json.load(open(os.path.join(work, f"pair{i}-{side}.json")))["metr
                for i in range(1, pairs + 1)] for side in ("base", "change")}
 
 def summary(xs):
-    q = statistics.quantiles(xs, n=4, method="inclusive") if len(xs) > 1 else xs * 3
+    q = statistics.quantiles(xs, n=4, method="inclusive")
     return {"median": q[1], "q1": q[0], "q3": q[2], "runs": xs}
 
 result = {}

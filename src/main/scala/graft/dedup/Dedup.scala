@@ -639,20 +639,17 @@ object Dedup {
     * token hash, ±1 votes, sign bits, Hamming — replays in DuckDB, so a
     * brute-force Hamming join is a valid oracle for the banded plan.
     *
-    * Pigeonhole recall guarantee: the 60 bits split into ten 6-bit
-    * blocks; a pair within Hamming distance h differs in ≤ h blocks, so
-    * at least 10 − h blocks are untouched and any m ≤ 10 − h of them
-    * form a key the pair shares — one table per m-block combination.
-    * Key width drives bucket count (the scale lever), so m is the
-    * widest the radius allows, capped at 3:
-    *  - h ≤ 7 → C(10,3) = 120 tables × 18-bit keys;
-    *  - h = 8 → C(10,2) = 45 tables × 12-bit keys.
-    * Four-block keys (210 × 24 bits) shrink candidates further but pay
-    * for the extra tables on small corpora. */
+    * Pigeonhole recall guarantee: the 60 bits split into b = h + 2
+    * blocks (block i holds bits [60i/b, 60(i+1)/b)); a pair within
+    * Hamming distance h differs in ≤ h blocks, so at least 2 blocks are
+    * untouched and the pair shares the key of that block pair — one
+    * table per pair of blocks, C(h + 2, 2) tables with keys of 120/b
+    * bits: 28 tables of 15 bits at radius 6, 45 of 12 at 8, fewer and
+    * wider at smaller radii (measurements in SCALE.md). */
   def simhashPairsPortable(docs: DataFrame, maxHamming: Int,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 8,
-      "maxHamming must be in [0,8] for the 10-block 60-bit geometry")
+      "maxHamming must be in [0,8] (wider radii leave keys under 12 bits)")
     // severed: the banded self-join reads fps on both sides — without
     // the cut each band task binary carries the simhash expression
     // tree twice and the signatures compute twice (Lineage.sever)
@@ -660,11 +657,13 @@ object Dedup {
       spread(docs).select(col(idCol).as("doc"),
         org.apache.spark.sql.graft.PortableSimHash60
           .portable_simhash60(norm_text(col(textCol))).as("sh")))
+    val b = maxHamming + 2
+    val cut = (0 to b).map(_ * 60 / b)
+    def width(i: Int): Int = cut(i + 1) - cut(i)
     def block(i: Int): Column =
-      shiftright(col("sh"), i * 6).bitwiseAND(lit(63L))
-    val m = math.min(3, 10 - maxHamming)
-    bandedHammingJoin(fps, (0 until 10).combinations(m).toSeq.map(bs =>
-      bs.map(block).reduce((key, b) => shiftleft(key, 6) + b)), maxHamming)
+      shiftright(col("sh"), cut(i)).bitwiseAND(lit((1L << width(i)) - 1))
+    bandedHammingJoin(fps, (0 until b).combinations(2).toSeq.map { case Seq(i, j) =>
+      shiftleft(block(i), width(j)) + block(j) }, maxHamming)
   }
 
   /** The Manku self-join every Hamming detector shares: each (doc, sh)

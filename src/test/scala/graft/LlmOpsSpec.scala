@@ -339,8 +339,8 @@ class LlmOpsSpec extends AnyFunSuite {
       .select(col("da"), col("db"), bit_count(col("ha").bitwiseXOR(col("hb"))).as("d"))
       .filter(col("d") <= 8)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2)))
-    // radius 6 as before, plus both sides of the three-block/two-block
-    // key switch (7 is the widest three-block radius, 8 the two-block one)
+    // radius 6 as before, plus 7 and 8: the block count follows the
+    // radius, so each is its own table geometry
     for (h <- Seq(6, 7, 8)) {
       val exact = dist.collect { case (p, d) if d <= h => p }.toSet
       val banded = Dedup.simhashPairsPortable(docs, maxHamming = h).collect()

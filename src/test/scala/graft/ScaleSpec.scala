@@ -260,12 +260,26 @@ class ScaleSpec extends AnyFunSuite {
     var spreadAgg = agg
     assert(jobsOf { spreadAgg = spreadIfNarrow(agg) } == 0)
     assert(spreadAgg.collect().toSet == agg.collect().toSet)
+    // the aggregate is planned at spark.sql.shuffle.partitions (= the
+    // target here): the planned count, taken before AQE coalescing,
+    // reads wide, so it passes through
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt >= target)
+    assert(spreadAgg eq agg)
     // the one-file scan the gates pass is still spread to the target
     assert(scan.rdd.getNumPartitions < target)
     assert(spreadIfNarrow(scan).rdd.getNumPartitions == target)
     // and an input already as wide as the cluster passes through
     val wide = scan.repartition(target)
     assert(spreadIfNarrow(wide) eq wide)
+    // an adaptive union of wide inputs reads as its children together,
+    // not as narrow: no round-robin shuffle added, no job run
+    for (u <- Seq(wide.union(scan.repartition(target)), agg.union(agg))) {
+      var spreadU = u
+      assert(jobsOf { spreadU = spreadIfNarrow(u) } == 0)
+      assert(spreadU eq u)
+    }
+    // a union of narrow scans is still spread
+    assert(spreadIfNarrow(scan.union(scan)).rdd.getNumPartitions == target)
   }
 
   test("triangle partitioning spreads a hot bucket's pair work across cells") {
