@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for named queries to files — the
-  * plan-evidence artifact for optimization rounds (plans/r{N}/...).
+  * plan-evidence artifact for optimization rounds (plans/r{N}/...,
+  * git 9942477).
   *
   * Usage: sbt "runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]"
   * writes <outDir>/<query>_<suffix>.txt per query (all queries when the

@@ -307,43 +307,6 @@ object Dedup {
         .distinct_shingles(col(textCol), n)).as("s"))
       .select(col("doc"), xxhash64(col("s")).as("s"))
 
-  /** Corpus-size crossover for severing the shingle index (bytes of
-    * the optimizer's input-size estimate). The index feeds BOTH
-    * self-join sides, the df-cap window and the per-doc set sizes —
-    * four references whose pre-AQE plans each duplicate the corpus
-    * scan + tokenize + explode subtree. ABOVE the threshold one
-    * corpus pass builds the index and a hard sever
-    * ([[graft.util.Lineage.sever]]) materializes it for every
-    * consumer — paired A/B at sf1 (170 MB): d_ngram_jaccard
-    * 25.9 → 13.9 s, d_winnow_recall 38.8 → 15.1 s. BELOW it the
-    * block-manager materialization costs more than the recompute
-    * (AQE's runtime exchange reuse already deduplicates the identical
-    * subtrees): sf0.1 (0.6 MB parquet) measured 2.46 → 3.23 s severed.
-    * The default sits between the two measured input sizes (0.6 MB
-    * loses, 8 MB wins — sizes are the optimizer's estimate, i.e.
-    * parquet FILE bytes); at 100 TB the severed path is the only sane
-    * one (with `spark.graft.sever.reliable` for executor-loss
-    * safety). */
-  val SeverIndexBytesKey = "spark.graft.jaccard.severIndexBytes"
-  private val SeverIndexBytesDefault = 4L * 1024 * 1024
-
-  private def severIndexBytes(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(SeverIndexBytesKey).map { raw =>
-      raw.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"$SeverIndexBytesKey must be a whole number of bytes, got '$raw'"))
-    }.getOrElse(SeverIndexBytesDefault)
-
-  /** Size-adaptive hard sever: above the [[SeverIndexBytesKey]]
-    * crossover (measured on the shingle-index family) materialize
-    * `df`; below it, return it untouched and let AQE's runtime
-    * exchange reuse deduplicate repeated references. `sizeOf` is the
-    * frame whose INPUT size drives the decision (the corpus scan). */
-  private[graft] def severIfBig(sizeOf: DataFrame)(df: DataFrame): DataFrame =
-    if (sizeOf.queryExecution.optimizedPlan.stats.sizeInBytes >=
-        BigInt(severIndexBytes(sizeOf)))
-      graft.util.Lineage.severTracked(df)
-    else df
-
   /** Near-duplicate pairs by exact word-n-gram Jaccard ≥ threshold.
     * Output: (doc_a, doc_b, jaccard) with doc_a < doc_b.
     *
@@ -365,20 +328,21 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, n: Int, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text",
       maxShingleDf: Long = 10000L): DataFrame = {
-    // size-adaptive severing — see [[SeverIndexBytesKey]]
-    val maybeSever = severIfBig(docs) _
-    val idx = maybeSever(shingleIndex(docs, idCol, textCol, n))
-    // per-doc set sizes from the index itself, on both paths: the index
-    // IS the per-doc distinct-shingle set (one row per (doc, s)), and
-    // docs with no shingle cannot appear in `inter` (no index rows).
-    // UNCAPPED by construction (counted before the df-cap).
-    val counts = maybeSever(idx.groupBy(col("doc")).agg(count(lit(1)).as("n_sh")))
+    // the index feeds both self-join sides, the df-cap window and the
+    // per-doc set sizes: severed, one corpus pass builds it for all four
+    // (graft.util.Lineage.sever), and so are the frames derived from it
+    val sever = graft.util.Lineage.severTracked _
+    val idx = sever(shingleIndex(docs, idCol, textCol, n))
+    // per-doc set sizes from the index itself: the index IS the per-doc
+    // distinct-shingle set (one row per (doc, s)), and docs with no
+    // shingle cannot appear in `inter` (no index rows). UNCAPPED by
+    // construction (counted before the df-cap).
+    val counts = sever(idx.groupBy(col("doc")).agg(count(lit(1)).as("n_sh")))
     // df cap as a window count over the SAME hash-partitioning-by-s the
-    // self-join needs anyway; on the severed path computed ONCE and
-    // itself severed (both join sides read it)
+    // self-join needs anyway, computed once (both join sides read it)
     val kept =
       if (maxShingleDf == Long.MaxValue) idx
-      else maybeSever(idx
+      else sever(idx
         .withColumn("s_df", count(lit(1)).over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("s"))))
         .filter(col("s_df") <= maxShingleDf)
@@ -452,11 +416,10 @@ object Dedup {
       threshold: Double): DataFrame = {
     val candIds = cands.select(col("doc_a").as("doc"))
       .union(cands.select(col("doc_b").as("doc"))).distinct()
-    // the pruned set feeds BOTH pair sides; above the corpus-size
-    // crossover, sever it so the corpus-scale shingle-set expression
-    // runs once (round-20, same discipline as the jaccard index —
-    // pruned is candidate-bounded, tiny next to the corpus)
-    val pruned = severIfBig(shSets)(
+    // the pruned set feeds BOTH pair sides; severed, the corpus-scale
+    // shingle-set expression runs once (same discipline as the jaccard
+    // index — pruned is candidate-bounded, tiny next to the corpus)
+    val pruned = graft.util.Lineage.severTracked(
       shSets.join(candIds, Seq("doc"), "left_semi"))
     cands
       .join(pruned.select(col("doc").as("doc_a"), col("sh").as("sh_a")), "doc_a")

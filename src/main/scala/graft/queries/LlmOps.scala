@@ -1427,10 +1427,8 @@ object LlmOps {
     // two aggregates and `truth` by two — un-severed, each reference
     // re-ran its whole detector (the r19 plan carried 24 parquet scans
     // for this gate; paired sf1 A/B: 38.8 → 15.1 s). Both sets are
-    // pair-sized; size-gated like the shingle index (below the
-    // crossover AQE's runtime exchange reuse already deduplicates the
-    // repeated subtrees and the checkpoint round-trip just costs).
-    val sever = Dedup.severIfBig(d) _
+    // pair-sized, and severing them wins at sf0.1 too (2.68 → 2.28 s).
+    val sever = graft.util.Lineage.severTracked _
     val truth = sever(
       Dedup.ngramJaccardPairs(d, n = 3, threshold = 0.5)
         .select(col("doc_a"), col("doc_b")))

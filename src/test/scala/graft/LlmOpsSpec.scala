@@ -1178,8 +1178,23 @@ class LlmOpsSpec extends AnyFunSuite {
   }
 
   test("d_dup_union's text evidence rides the banding detector, not the inverted-index join") {
-    val df = SparkEntry.queries("d_dup_union")(spark, sf0001)
-    val plan = df.queryExecution.optimizedPlan.toString.toLowerCase
+    // the detector's frames are severed while the gate is built, so the
+    // plans of the queries that materialized them are read as well
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.optimizedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plan = try {
+      val df = SparkEntry.queries("d_dup_union")(spark, sf0001)
+      org.apache.spark.sql.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (df.queryExecution.optimizedPlan.toString +: plans.asScala.toSeq)
+        .mkString("\n").toLowerCase
+    } finally spark.listenerManager.unregister(listener)
     assert(plan.contains("minhashsignature") || plan.contains("minhash_signature"),
       "expected the MinHash-LSH detector on the text side")
     assert(!plan.contains("s_df"),

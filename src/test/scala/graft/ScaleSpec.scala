@@ -102,6 +102,37 @@ class ScaleSpec extends AnyFunSuite {
     assert(leftover.isEmpty, s"lazily severed RDDs survive release: $leftover")
   }
 
+  test("Lineage.sever under block loss: reliable mode recomputes, local mode raises") {
+    import graft.util.Lineage
+    import org.apache.spark.graft.BlockLoss
+    val base = (1L to 100L).toDF("id")
+      .select(col("id"), (col("id") * 7 % 13).as("v"))
+      .filter(col("id") % 4 =!= 0)
+    val expect = base.collect().toSeq.sortBy(_.getLong(0))
+    // sever, read once, then drop the frame's blocks the way a lost
+    // executor would and read again
+    def readAfterLoss(): Seq[org.apache.spark.sql.Row] = {
+      val (cp, release) = Lineage.sever(base)
+      try {
+        assert(cp.collect().toSeq.sortBy(_.getLong(0)) == expect)
+        val rddId = cp.queryExecution.analyzed.collectFirst {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+        }.get
+        BlockLoss.dropBlocks(spark.sparkContext, rddId)
+        cp.collect().toSeq.sortBy(_.getLong(0))
+      } finally release(true)
+    }
+    // local mode: the blocks were the only copy
+    val e = intercept[org.apache.spark.SparkException](readAfterLoss())
+    assert(e.getMessage.contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"), e.getMessage)
+    spark.conf.set(Lineage.ReliableKey, "true")
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+      spark.sparkContext.setCheckpointDir(dir.toString)
+      assert(readAfterLoss() == expect)
+    } finally spark.conf.unset(Lineage.ReliableKey)
+  }
+
   test("saltedSelfJoinPairs == plain self-join pairs, every salt") {
     // skewed buckets on purpose: one hot bucket with 12 members
     val rows = (Seq.tabulate(12)(i => (i.toLong, "hot")) ++
