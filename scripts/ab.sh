@@ -158,7 +158,7 @@ pairs = int(pairs)
 runs = {side: [json.load(open(os.path.join(work, f"pair{i}-{side}.json")))
                for i in range(1, pairs + 1)] for side in ("base", "change")}
 if gates:
-    metrics = [{"name": g, "unit": "s", "better": "lower", "bound": None}
+    metrics = [{"name": g, "unit": "s", "better": "lower"}
                for g in gates.split(",")]
     runs = {side: [{g: {"value": v} for g, v in r["queries"].items()} for r in rs]
             for side, rs in runs.items()}
