@@ -13,25 +13,7 @@ import graft.dedup.Dedup
 class NgramJaccardSpec extends AnyFunSuite {
   import SharedSpark._
   import spark.implicits._
-
-  private def pairs(docs: org.apache.spark.sql.DataFrame,
-      threshold: Double): Set[(Long, Long, Double)] =
-    try Dedup.ngramJaccardPairs(docs, n = 3, threshold = threshold).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    finally graft.util.IntermediateCaches.releaseAll(blocking = true)
-
-  /** All pairs sharing a shingle, with their exact jaccard: one
-    * lowercased whitespace-token trigram set per id. */
-  private def bruteForce(docs: Seq[(Long, String)]): Seq[(Long, Long, Double)] = {
-    val sets = docs.groupMapReduce(_._1) { case (_, t) =>
-      t.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
-        .sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
-    }(_ ++ _).toSeq.sortBy(_._1)
-    for {
-      (a, sa) <- sets; (b, sb) <- sets if a < b
-      common = (sa & sb).size if common > 0
-    } yield (a, b, common.toDouble / (sa.size + sb.size - common))
-  }
+  import NgramJaccardSpec._
 
   test("ngramJaccardPairs == driver brute-force Jaccard (generated)") {
     val vocab = Vector.tabulate(40)(i => s"w$i")
@@ -70,15 +52,27 @@ class NgramJaccardSpec extends AnyFunSuite {
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
     assert(seen == Set("1", "[.5,1)", "(0,.5)"), s"jaccard ranges seen: $seen")
   }
+}
 
-  test("a repeated doc_id is one shingle set: the fixture returns exactly (1, 2, 0.7)") {
-    // doc 1 appears twice with different texts: its set is the union of
-    // both rows' trigrams, 8 + 1 = 9, of which 7 are doc 2's (8 trigrams)
-    val dup = Seq(
-      1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
-      2L -> "alpha beta gamma delta epsilon zeta eta theta iota lambda",
-      1L -> "red green blue",
-      3L -> "one two three four five").toDF("doc_id", "text")
-    assert(pairs(dup, 0.5) == Set((1L, 2L, 0.7)))
+object NgramJaccardSpec {
+  /** `ngramJaccardPairs` at trigrams, collected; releases its severed
+    * frames. */
+  def pairs(docs: org.apache.spark.sql.DataFrame,
+      threshold: Double): Set[(Long, Long, Double)] =
+    try Dedup.ngramJaccardPairs(docs, n = 3, threshold = threshold).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    finally graft.util.IntermediateCaches.releaseAll(blocking = true)
+
+  /** All pairs sharing a shingle, with their exact jaccard: one
+    * lowercased whitespace-token trigram set per id. */
+  def bruteForce(docs: Seq[(Long, String)]): Seq[(Long, Long, Double)] = {
+    val sets = docs.groupMapReduce(_._1) { case (_, t) =>
+      t.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
+        .sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
+    }(_ ++ _).toSeq.sortBy(_._1)
+    for {
+      (a, sa) <- sets; (b, sb) <- sets if a < b
+      common = (sa & sb).size if common > 0
+    } yield (a, b, common.toDouble / (sa.size + sb.size - common))
   }
 }
